@@ -7,15 +7,15 @@ reference knob                      -> engine knob
 sketches_factor                        SketchConfig.samples_factor
 CameoSketch / L0 compile switch        SketchConfig.variant
 seed                                   SketchConfig.seed
-gutter_sys / gutter_factor             DriverConfig.num_partitions (the
+gutter_sys / gutter_factor             SketchCC(num_partitions=...) (the
                                        guttering system IS the shuffle; its
                                        fan-out is the partition count)
 worker_threads / batch_factor          DriverConfig.eager_batch_limit +
                                        Spark's own executor sizing (local[N])
 backup_in_mem                          DriverConfig.checkpoint_dir (None =
                                        in-memory localCheckpoint lineage)
--                                      DriverConfig.driver_finish_bytes
-                                       (Boruvka tail-finish budget; no
+-                                      DRIVER_BYTES (driver-side finish
+                                       budget of every operator; no
                                        reference analog — its query is
                                        always fully in-process)
 """
@@ -23,6 +23,11 @@ backup_in_mem                          DriverConfig.checkpoint_dir (None =
 from __future__ import annotations
 
 from dataclasses import dataclass
+
+# The one driver byte budget: every driver-side finish (Boruvka tail, exact
+# CC, label propagation, PageRank, triangles) and the distributed-CC remap
+# collect to the driver only while their data provably fits this many bytes.
+DRIVER_BYTES = 64 * 1024 * 1024
 
 
 @dataclass(frozen=True)
@@ -34,9 +39,7 @@ class SketchConfig:
 
 @dataclass(frozen=True)
 class DriverConfig:
-    num_partitions: int | None = None  # None: session shuffle partitions, capped 64
     eager_batch_limit: int = 500_000
-    driver_finish_bytes: int = 256 * 1024 * 1024
     checkpoint_dir: str | None = None
     eager: bool = True
     # cross-batch stream-contract validation (live-edge parity side-table,

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graphzeppelin_spark.config import DRIVER_BYTES
 from graphzeppelin_spark.functions.edges import vertices_of
 
 
@@ -86,7 +87,7 @@ def connected_components_df(
     checkpoint_each_round: bool = True,
     pairs_per_check: int = 1,
     checkpoint_dir: str | None = None,
-    driver_finish_bytes: int = 64 * 1024 * 1024,
+    driver_finish_bytes: int = DRIVER_BYTES,
 ) -> DataFrame:
     """Return (v:long, component:long), component = min vertex id in component.
 
@@ -166,24 +167,16 @@ def connected_components_df(
         """One collect + vectorized numpy DSU over a byte-gated edge set;
         returns the (v, c) remap (c = component min, rows only where
         c != v) to feed the same labeling join as the star-forest path."""
-        import numpy as np
         import pandas as pd
 
-        from graphzeppelin_spark.sketch.dsu import NumpyDSU
+        from graphzeppelin_spark.sketch.dsu import driver_components
 
         pdf = cur_df.select("src", "dst").toPandas()
-        s = pdf["src"].to_numpy(np.int64)
-        d = pdf["dst"].to_numpy(np.int64)
-        ids = np.unique(np.concatenate([s, d]))
-        local = NumpyDSU(len(ids))
-        local.union_edges_bulk(np.searchsorted(ids, s), np.searchsorted(ids, d))
-        comp = ids[local.labels()]
+        ids, comp = driver_components(pdf["src"], pdf["dst"])
         changed = comp != ids
         return F.broadcast(
             edges.sparkSession.createDataFrame(
-                pd.DataFrame(
-                    {"v": ids[changed], "c": comp[changed]}
-                ).astype({"v": "int64", "c": "int64"}),
+                pd.DataFrame({"v": ids[changed], "c": comp[changed]}),
                 schema="v long, c long",
             )
         )

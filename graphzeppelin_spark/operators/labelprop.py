@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from graphzeppelin_spark.config import DRIVER_BYTES
 from graphzeppelin_spark.functions.edges import (
     fits_broadcast,
     stage_edges,
@@ -31,7 +32,7 @@ def label_propagation_df(
     checkpoint_dir: str | None = None,
     broadcast_max_bytes: int = 64 * 1024 * 1024,
     big_threshold: int = 1_000_000,
-    driver_finish_bytes: int = 64 * 1024 * 1024,
+    driver_finish_bytes: int = DRIVER_BYTES,
 ) -> DataFrame:
     """Return (v:long, label:long).
 
@@ -94,24 +95,14 @@ def label_propagation_df(
         import numpy as np
         import pandas as pd
 
-        from graphzeppelin_spark.sketch.dsu import NumpyDSU
+        from graphzeppelin_spark.sketch.dsu import driver_components
 
         epdf = edges_bi.select("src", "dst").toPandas()
-        ids = np.sort(labels.select("v").toPandas()["v"].to_numpy(np.int64))
+        ids = labels.select("v").toPandas()["v"].to_numpy(np.int64)
         s = epdf["src"].to_numpy(np.int64)
         d = epdf["dst"].to_numpy(np.int64)
-
-        def _lookup(x):
-            pos = np.searchsorted(ids, x)
-            ok = (pos < len(ids)) & (ids[np.minimum(pos, len(ids) - 1)] == x)
-            return pos, ok
-
-        sp, s_ok = _lookup(s)
-        dp, d_ok = _lookup(d)
-        keep = s_ok & d_ok  # induced subgraph: both endpoints labeled
-        local = NumpyDSU(len(ids))
-        local.union_edges_bulk(sp[keep], dp[keep])
-        comp = ids[local.labels()]
+        keep = np.isin(s, ids) & np.isin(d, ids)  # induced subgraph: both endpoints labeled
+        ids, comp = driver_components(s[keep], d[keep], ids)
         labels.unpersist()
         edges_bi.unpersist()
         return spark.createDataFrame(

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graphzeppelin_spark.config import DRIVER_BYTES
 from graphzeppelin_spark.functions.edges import (
     fits_broadcast,
     stage_edges,
@@ -35,7 +36,7 @@ def pagerank_df(
     checkpoint_dir: str | None = None,
     broadcast_max_bytes: int = 64 * 1024 * 1024,
     big_threshold: int = 1_000_000,
-    driver_finish_bytes: int = 64 * 1024 * 1024,
+    driver_finish_bytes: int = DRIVER_BYTES,
 ) -> DataFrame:
     """Return (v:long, score:double). Undirected edges contribute both ways.
 

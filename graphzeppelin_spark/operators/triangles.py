@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graphzeppelin_spark.config import DRIVER_BYTES
 from graphzeppelin_spark.functions.edges import degrees
 
 
@@ -102,7 +103,7 @@ def _driver_triangle_rows(edges: DataFrame, driver_finish_bytes: int,
 
 
 def triangle_count_df(
-    edges: DataFrame, driver_finish_bytes: int = 64 * 1024 * 1024
+    edges: DataFrame, driver_finish_bytes: int = DRIVER_BYTES
 ) -> DataFrame:
     """Return a 1-row DataFrame (n_triangles: long). `edges` canonical undirected."""
     rows = _driver_triangle_rows(edges, driver_finish_bytes)
@@ -114,7 +115,7 @@ def triangle_count_df(
 
 
 def triangles_per_vertex_df(
-    edges: DataFrame, driver_finish_bytes: int = 64 * 1024 * 1024
+    edges: DataFrame, driver_finish_bytes: int = DRIVER_BYTES
 ) -> DataFrame:
     """Return (v: long, tri: long) — triangles incident to each vertex (vertices
     in no triangle are omitted)."""

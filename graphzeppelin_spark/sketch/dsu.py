@@ -84,3 +84,21 @@ class NumpyDSU:
 
     def num_components(self) -> int:
         return int(len(np.unique(self.labels())))
+
+
+def driver_components(
+    src: np.ndarray, dst: np.ndarray, ids: np.ndarray | None = None
+) -> tuple[np.ndarray, np.ndarray]:
+    """Connected components of a driver-resident edge list over sparse ids.
+
+    Returns (ids, comp): the sorted vertex ids and each one's component
+    label, the minimum member id. `ids` defaults to the edge endpoints; a
+    caller passing its own vertex set must pass edges among those vertices
+    only. Ids are compressed to [0, len(ids)) so the DSU is sized by the
+    edge list, never by the id range."""
+    src = np.asarray(src, dtype=np.int64)
+    dst = np.asarray(dst, dtype=np.int64)
+    ids = np.unique(np.concatenate([src, dst]) if ids is None else ids)
+    local = NumpyDSU(len(ids))
+    local.union_edges_bulk(np.searchsorted(ids, src), np.searchsorted(ids, dst))
+    return ids, ids[local.labels()]

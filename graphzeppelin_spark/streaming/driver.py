@@ -48,8 +48,8 @@ class GraphStreamDriver:
         sketch_config: "SketchConfig | None" = None,
         validate_stream: bool = False,
     ):
-        if sketch_config is not None:
-            seed, variant = sketch_config.seed, sketch_config.variant
+        if sketch_config is None:
+            sketch_config = SketchConfig(seed=seed, variant=variant)
         if config is not None:  # unified config surface (config.DriverConfig)
             checkpoint_dir = config.checkpoint_dir
             eager = config.eager
@@ -58,12 +58,12 @@ class GraphStreamDriver:
         self.spark = spark
         self.stream = stream
         self.num_vertices = num_vertices
-        self.alg = SketchCC(spark, num_vertices, seed=seed, variant=variant)
+        self.alg = SketchCC(spark, num_vertices, config=sketch_config)
         self.state: DataFrame | None = None
         self.applied_seq = 0
         self.store = CheckpointStore(spark, checkpoint_dir) if checkpoint_dir else None
-        self.seed = seed
-        self.variant = variant
+        self.seed = sketch_config.seed
+        self.variant = sketch_config.variant
         # eager cache (reference pre_insert / dsu_valid)
         self.eager = eager
         self.eager_batch_limit = eager_batch_limit
@@ -79,7 +79,7 @@ class GraphStreamDriver:
         # opt-in CROSS-BATCH stream validation (the one malformation class
         # the |net|>1 in-slice guard cannot see: two inserts of one edge in
         # DIFFERENT micro-batches each net +1 and silently corrupt the
-        # merged state — sketch_cc.updates_from_stream docstring). The
+        # merged state — SketchCC._canonical_updates docstring). The
         # reference assumes an alternating stream per edge at the producer;
         # this engine can additionally CHECK it, because unlike the
         # reference it already materializes distributed per-batch tables: a
@@ -147,6 +147,7 @@ class GraphStreamDriver:
                         "seed": self.seed,
                         "num_vertices": self.num_vertices,
                         "variant": self.variant,
+                        "samples_factor": self.alg.geom.samples_factor,
                         "seq_watermark": hi,
                         "dsu_valid": False,  # reheat always requires a fresh query
                         "ingest_metrics": self.metrics[-20:],
@@ -552,8 +553,11 @@ class GraphStreamDriver:
             spark,
             stream,
             num_vertices=meta["num_vertices"],
-            seed=meta["seed"],
-            variant=meta["variant"],
+            sketch_config=SketchConfig(
+                seed=meta["seed"],
+                variant=meta["variant"],
+                samples_factor=meta.get("samples_factor", 1.0),
+            ),
             checkpoint_dir=checkpoint_dir,
             eager=eager,
             eager_batch_limit=eager_batch_limit,

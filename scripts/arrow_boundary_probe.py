@@ -37,18 +37,9 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 def build_state_arrow(alg, stream):
     """mapInArrow twin of SketchCC.build_state: same packed updates, same
     kernel, but RecordBatches in/out with zero pandas construction."""
-    from pyspark.sql import types as T
+    from graphzeppelin_spark.operators.sketch_cc import STATE_SCHEMA
+    from graphzeppelin_spark.sketch.kernel import SketchMatrix, encode_group_rows
 
-    from graphzeppelin_spark.sketch.kernel import SketchMatrix
-
-    # probe-local schema: the round-7 single-blob layout (the probe compares
-    # Arrow vs pandas boundaries, not the round-8 grouped state format)
-    STATE_SCHEMA = T.StructType(
-        [
-            T.StructField("vertex", T.LongType(), False),
-            T.StructField("sketch", T.BinaryType(), False),
-        ]
-    )
     geom = alg.geom
     updates = alg.packed_updates(stream).repartition(alg.num_partitions, "vertex")
 
@@ -65,9 +56,16 @@ def build_state_arrow(alg, stream):
         signs = np.where(seid >= 0, np.int64(1), np.int64(-1))
         sm = SketchMatrix(geom, len(uniq), reuse_slot="build")
         sm.update_many(inv, np.abs(seid).astype(np.uint64), signs=signs)
+        dets, grps = encode_group_rows(
+            sm.buckets, geom.cols_per_sample * geom.bkt_per_col, geom.num_samples
+        )
         yield pa.RecordBatch.from_arrays(
-            [pa.array(uniq), pa.array(sm.to_bytes_rows(), type=pa.binary())],
-            names=["vertex", "sketch"],
+            [
+                pa.array(uniq),
+                pa.array(dets, type=pa.binary()),
+                pa.array(grps, type=pa.list_(pa.binary())),
+            ],
+            names=["vertex", "det", "grp"],
         )
 
     return updates.mapInArrow(_build, schema=STATE_SCHEMA)

@@ -30,7 +30,11 @@ VARIANT = os.environ.get("PROBE_VARIANT", "cubesketch")
 
 
 def one_task(seed: int, chunk: int) -> float:
-    from graphzeppelin_spark.sketch.kernel import SketchGeometry, SketchMatrix
+    from graphzeppelin_spark.sketch.kernel import (
+        SketchGeometry,
+        SketchMatrix,
+        encode_group_rows,
+    )
 
     geom = SketchGeometry(
         num_vertices=N, seed=42, samples_factor=FACTOR, variant=VARIANT
@@ -44,9 +48,11 @@ def one_task(seed: int, chunk: int) -> float:
     t0 = time.time()
     sm = SketchMatrix(geom, UNIQ, reuse_slot="probe")
     sm.update_many(rows, eids, signs=signs, chunk=chunk)
-    blobs = sm.to_bytes_rows()
+    encoded = encode_group_rows(
+        sm.buckets, geom.cols_per_sample * geom.bkt_per_col, geom.num_samples
+    )
     dt = time.time() - t0
-    del blobs
+    del encoded
     return dt
 
 

@@ -221,6 +221,8 @@ def test_fused_skey_build_state_byte_identical(spark, monkeypatch):
     cs_twocol = _state_checksum(alg.build_state(stream))
     assert cs_fused == cs_twocol
     # and the query result over the fused state matches the exact oracle
+    monkeypatch.undo()
+    assert n <= scc.FUSED_KEY_MAX_N
     labels, _ = alg.boruvka(alg.build_state(stream))
     edges_np = oracle.live_edges(pdf, n)
     np.testing.assert_array_equal(labels, oracle.connected_components(edges_np, n))

@@ -102,3 +102,47 @@ def test_sketch_cc_distributed_labels_with_deletes(spark):
     expected = oracle.connected_components(oracle.live_edges(s, n), n)
     for v, c in zip(out["vertex"], out["component"]):
         assert expected[v] == c
+
+
+def test_boruvka_moves_on_after_a_fail_only_group(spark, monkeypatch):
+    """A sample group that merges nothing because its samples FAILed must
+    not end the query: the next group carries on, as in the reference,
+    which counts a FAIL as a modification. The driver-side patch FAILs
+    every non-ZERO sample of the first driver-finish group; round 0 samples
+    in the Python workers, which the patch does not reach."""
+    from graphzeppelin_spark.sketch import kernel
+
+    n = 128
+    s = path_graph_stream(n, seed=2)
+    alg = SketchCC(spark, num_vertices=n, seed=7)
+    state = alg.build_state(stream_df(spark, s)).persist()
+    state.count()
+    real = kernel.SketchMatrix.sample_many
+    calls = []
+
+    def first_call_fails(self, sample_idx):
+        status, eid = real(self, sample_idx)
+        if not calls:
+            status = np.where(status == kernel.ZERO, kernel.ZERO, kernel.FAIL)
+            status = status.astype(np.int8)
+            eid[:] = 0
+        calls.append(sample_idx)
+        return status, eid
+
+    monkeypatch.setattr(kernel.SketchMatrix, "sample_many", first_call_fails)
+    labels, forest = alg.boruvka(state)
+    monkeypatch.undo()
+    state.unpersist()
+    assert len(calls) > 1  # the finish ran past the FAILed group
+    edges_np = oracle.live_edges(s, n)
+    np.testing.assert_array_equal(labels, oracle.connected_components(edges_np, n))
+    assert oracle.spanning_forest_is_valid(forest, edges_np, n)
+
+
+def test_vertex_id_limit_fails_loudly(spark):
+    """Edge ids lo*n + hi must fit int64, i.e. n*n - 1 <= 2^63 - 1, which
+    holds up to n = 3,037,000,499: beyond it construction must raise rather
+    than let ids wrap."""
+    SketchCC(spark, num_vertices=3_037_000_499)
+    with pytest.raises(ValueError, match="overflow int64"):
+        SketchCC(spark, num_vertices=3_037_000_500)

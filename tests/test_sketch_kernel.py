@@ -88,17 +88,6 @@ def test_merged_by_group_xor():
     assert s[1] == GOOD and e[1] in (30, 40)
 
 
-def test_serialization_roundtrip():
-    g = geom()
-    sm = SketchMatrix(g, 3)
-    sm.update_many(np.array([0, 1, 2]), np.array([3, 5, 7], dtype=np.uint64))
-    blobs = sm.to_bytes_rows()
-    sm2 = SketchMatrix.from_bytes_rows(g, blobs)
-    assert np.array_equal(sm.buckets, sm2.buckets)
-    s, e = sm2.sample_many(0)
-    assert (s == GOOD).all()
-
-
 def test_sample_idx_groups_independent():
     g = geom()
     sm = SketchMatrix(g, 1)

@@ -129,6 +129,44 @@ def test_checkpoint_resume_equality(spark, tmp_path):
     assert meta["total_rows"] > 0 and len(meta["partitions"]) >= 1
 
 
+def test_samples_factor_survives_checkpoint_resume(spark, tmp_path):
+    """SketchConfig.samples_factor sets the sample budget: the driver must
+    hand it to its sketch, record it in checkpoint metadata and restore it
+    on resume — 1.0 for a checkpoint written without the key."""
+    import glob
+    import json
+    import os
+
+    from graphzeppelin_spark.config import SketchConfig
+
+    n = 64
+    s = multiples_graph_stream(n)
+    ckpt = str(tmp_path / "ckpt")
+    drv = GraphStreamDriver(
+        spark, stream_df(spark, s), n, checkpoint_dir=ckpt, eager=False,
+        sketch_config=SketchConfig(seed=5, samples_factor=0.7),
+    )
+    assert drv.alg.geom.samples_factor == 0.7
+    drv.process_stream_until(len(s) // 2)
+    assert drv.store.read()[1]["samples_factor"] == 0.7
+
+    drv2 = GraphStreamDriver.resume(spark, stream_df(spark, s), ckpt, eager=False)
+    assert drv2.alg.geom.samples_factor == 0.7
+    assert drv2.alg.geom.num_samples == drv.alg.geom.num_samples
+    drv2.process_stream_until(len(s))
+    expected = oracle.connected_components(oracle.live_edges(s, n), n)
+    np.testing.assert_array_equal(drv2.connected_components(), expected)
+
+    for path in glob.glob(os.path.join(ckpt, "**", "metadata.json"), recursive=True):
+        with open(path) as f:
+            meta = json.load(f)
+        meta.pop("samples_factor")
+        with open(path, "w") as f:
+            json.dump(meta, f)
+    drv3 = GraphStreamDriver.resume(spark, stream_df(spark, s), ckpt, eager=False)
+    assert drv3.alg.geom.samples_factor == 1.0
+
+
 def test_micro_batched_ingest_matches_oneshot(spark):
     n = 128
     s = dynamic_erdos_stream(num_vertices=n, density=0.03, rounds=3, seed=19)
