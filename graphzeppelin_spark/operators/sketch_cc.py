@@ -177,8 +177,8 @@ class SketchCC:
         )
         # default: session shuffle parallelism, capped at the cluster core
         # count — each partition owns a SketchMatrix block; python build
-        # tasks beyond the core count only add per-task fixed cost (64 vs 32
-        # build partitions A/B'd equal-to-worse at local[32]; a cluster
+        # tasks beyond the core count only add per-task fixed cost (~15 ms
+        # of stage wall per task at local[4], see _query_parts; a cluster
         # passes this explicitly to go wider for skew/memory headroom)
         self.num_partitions = num_partitions or max(2, min(
             int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
@@ -422,14 +422,16 @@ class SketchCC:
 
         The build shuffle keeps self.num_partitions (the gutter geometry),
         but query stages over the built state are latency-bound by per-task
-        overhead, not bytes: at kron_17 a no-op mapInPandas over the cached
-        state cost 1.11s at 128 tasks vs 0.38s coalesced to 32 (the cluster's
-        core count) — ~7ms fixed cost per python task with trivial work.
-        Scale-adaptive: sc.defaultParallelism is total cores on a cluster,
-        so this tracks the machine, never a local-mode constant; small
-        states additionally shrink toward ~2048 vertices per task (an 8-task
-        boruvka beat the 32-task one 1.65s vs 2.33s on the 15k-vertex sf0.1
-        chain — same fixed-cost-per-task argument at the next scale down)."""
+        overhead, not bytes. On a 4-core host (local[4]) a mapInPandas
+        stage of trivial tasks costs 0.26 s at 4 tasks and 1.24 s at 64:
+        ~15 ms of stage wall per extra task, PythonRunner's per-task `init`
+        a median 1 ms. Before the package guarded Spark's zip archives
+        against re-reads (session.skip_unchanged_zip_rereads) the same
+        stages took 0.64 s and 8.4 s: ~127 ms per task, `init` a median
+        277 ms. Scale-adaptive: sc.defaultParallelism is total cores on a
+        cluster, so this tracks the machine, never a local-mode constant;
+        small states additionally shrink toward ~2048 vertices per task
+        (the same fixed cost per task at the next scale down)."""
         # floor 2: repartition(1, root) would plan an Exchange SinglePartition
         # (losing the hash-partitioned reduce shape the plan gates pin)
         return max(2, min(
@@ -528,10 +530,10 @@ class SketchCC:
                 if len(active) * batch_est * slice_bytes_per_group <= driver_finish_bytes:
                     self.last_boruvka_stats["driver_finish_round"] = len(rounds_stats)
                     self.last_boruvka_stats["driver_finish_components"] = len(active)
-                    self._finish_driver_side(state, active, gidx, budget, dsu, forest)
+                    fails = self._finish_driver_side(state, active, gidx, budget, dsu, forest)
                     rounds_stats.append(
                         {"round": len(rounds_stats), "kind": "driver_finish",
-                         "active": len(active),
+                         "active": len(active), "fail_samples": fails,
                          "sec": round(time.time() - t_round, 3)}
                     )
                     break
@@ -545,6 +547,7 @@ class SketchCC:
             rounds_stats.append(
                 {"round": len(rounds_stats), "kind": "distributed",
                  "active": len(active), "good_samples": int((status == GOOD).sum()),
+                 "fail_samples": int((status == FAIL).sum()),
                  "sec": round(time.time() - t_round, 3)}
             )
             t_round = time.time()
@@ -620,7 +623,7 @@ class SketchCC:
         budget: int,
         dsu: NumpyDSU,
         forest: list,
-    ) -> None:
+    ) -> int:
         """Collect per-component slices for the remaining sample groups (the
         per-root reduce + one collect per BATCH) and run the remaining
         Boruvka steps in pure numpy (reference cc_sketch_alg.cpp:464-513
@@ -639,9 +642,12 @@ class SketchCC:
         slice aggregation commutes with DSU contraction (linear sketch) —
         and a component whose det bucket is now zero has an empty cut
         (ZERO) and leaves the active set. A later batch reduces over the
-        contracted (much smaller) active set."""
+        contracted (much smaller) active set.
+
+        Returns the number of FAIL samples over all the groups it ran."""
         g = self.geom
         gsz = g.cols_per_sample * g.bkt_per_col
+        fails = 0
         while group_lo < budget and len(active) > 1:
             kb = min(budget - group_lo, FINISH_BATCH_GROUPS)
             slice_nb = kb * gsz + 1
@@ -657,9 +663,10 @@ class SketchCC:
             slice_geom = _SliceGeom(g, slice_nb, kb)
             for gi in range(kb):
                 status, eid = SketchMatrix(slice_geom, len(roots), acc).sample_many(gi)
+                fails += int((status == FAIL).sum())
                 active, go = _boruvka_step(dsu, forest, self.num_vertices, roots, status, eid)
                 if not go:
-                    return
+                    return fails
                 uniq, inv = np.unique(dsu.find_many(roots), return_inverse=True)
                 merged = np.zeros((len(uniq), slice_nb, 2), dtype=np.uint64)
                 with np.errstate(over="ignore"):
@@ -667,6 +674,7 @@ class SketchCC:
                 nonzero = merged[:, -1].any(axis=1)  # sample_many's ZERO test
                 acc, roots = merged[nonzero], uniq[nonzero]
             active = roots
+        return fails
 
     def _sampled_vertices(
         self, state: DataFrame, group_lo: int, group_hi: int

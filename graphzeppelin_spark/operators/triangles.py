@@ -19,6 +19,12 @@ from pyspark.sql import functions as F
 from graphzeppelin_spark.config import DRIVER_BYTES
 from graphzeppelin_spark.functions.edges import degrees
 
+# driver bytes held per wedge at the peak of the driver-side plan: the ten
+# int64 wedge-length arrays _wedges_from_csr has live when it returns, which
+# is more than the closure probe adds to its three results (tracemalloc: 80.0
+# bytes per wedge over 1.95M wedges)
+WEDGE_BYTES = 80
+
 
 def _oriented(edges: DataFrame) -> DataFrame:
     """Orient canonical edges by (degree, id): low endpoint -> high endpoint."""
@@ -46,8 +52,7 @@ def _triangle_rows(edges: DataFrame) -> DataFrame:
     return wedges.join(closing, ["v1", "v2"], "left_semi")
 
 
-def _driver_triangle_rows(edges: DataFrame, driver_finish_bytes: int,
-                          wedge_cap: int = 20_000_000):
+def _driver_triangle_rows(edges: DataFrame, driver_finish_bytes: int):
     """Collect a byte-gated edge set and generate the closed-wedge rows
     (v1, v2, apex) in numpy — the same degree-ordered orientation + CSR
     wedge generation + closure probe as the distributed plan, off one
@@ -55,8 +60,8 @@ def _driver_triangle_rows(edges: DataFrame, driver_finish_bytes: int,
     to triangles; a handful of tiny-shuffle Spark jobs otherwise dominate
     small inputs). Returns None — and the caller keeps the distributed
     plan — when the edges don't fit the byte gate, ids don't pack into the
-    (int32, uint32) closure probe, or the wedge count (exact, from the
-    oriented out-degrees) exceeds wedge_cap."""
+    (int32, uint32) closure probe, or the wedges (counted exactly from the
+    oriented out-degrees, WEDGE_BYTES each) don't fit the byte gate."""
     import numpy as np
 
     from graphzeppelin_spark.operators.adjacency import (
@@ -89,7 +94,8 @@ def _driver_triangle_rows(edges: DataFrame, driver_finish_bytes: int,
     # exact wedge count from oriented out-degrees — bound the blowup BEFORE
     # materializing it
     _, ocnt = np.unique(u, return_counts=True) if len(u) else (None, np.zeros(0, np.int64))
-    if int((ocnt.astype(np.int64) * (ocnt - 1) // 2).sum()) > wedge_cap:
+    wedges = int((ocnt.astype(np.int64) * (ocnt - 1) // 2).sum())
+    if wedges * WEDGE_BYTES > driver_finish_bytes:
         return None
     uniq, indptr, indices = _csr_from_pairs(u, w)
     v1, v2, apex = _wedges_from_csr(uniq, indptr, indices)

@@ -9,6 +9,7 @@ skew-join splitting plus our explicit hub salting handle that — SURVEY.md §4)
 from __future__ import annotations
 
 import os
+import sys
 import threading
 
 from pyspark.sql import SparkSession
@@ -61,7 +62,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
@@ -71,6 +73,64 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def default_driver_memory(total_bytes: int | None = None) -> str:
+    """spark.driver.memory when $SPARK_DRIVER_MEM is unset: a quarter of the
+    host's RAM (`total_bytes`, read from the host when None), clamped to
+    2-8 GB. In local mode the driver JVM is the executor too, and it shares
+    the host with the Python workers and the inputs; a heap sized past the
+    host's RAM only turns an OutOfMemoryError into the host killing it."""
+    if total_bytes is None:
+        total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(2, min(8, total_bytes // 2**32))}g"
+
+
+def skip_unchanged_zip_rereads() -> None:
+    """Make `importlib.invalidate_caches()` re-read a zip archive on sys.path
+    only when the archive changed.
+
+    PySpark's Python worker calls importlib.invalidate_caches() before every
+    task (setup_spark_files in pyspark/worker_util.py). Before CPython 3.12,
+    zipimporter.invalidate_caches re-reads its archive's central directory
+    in pure Python, and a worker's sys.path holds pyspark.zip (1,328
+    entries), the py4j zip and the spark-core jar (5,359 entries) behind 16
+    zipimporters (one per archive and sub-package): 130-435 ms of every
+    task's start on a 4-core host. The wrapper installed here re-reads an
+    archive only when its (st_ino, st_mtime_ns, st_size) differs from the
+    one stat-ed before its last re-read through the wrapper; otherwise the
+    importer takes the directory that zipimport already caches for the
+    archive, which is the one that re-read produced. An unchanged archive
+    then costs one stat per importer, and a rewritten one is still reloaded.
+    CPython 3.12 made this invalidation lazy, so there it does nothing.
+
+    The package runs this at import, so a reused worker pays the re-reads
+    once instead of on every task. Idempotent."""
+    if sys.version_info >= (3, 12):
+        return
+    import zipimport
+
+    reread = zipimport.zipimporter.invalidate_caches
+    if getattr(reread, "skips_unchanged", False):
+        return
+    stat_at_read: dict[str, tuple[int, int, int]] = {}
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            reread(self)  # gone or unreadable: the original drops the cache
+            return
+        key = (st.st_ino, st.st_mtime_ns, st.st_size)
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if files is not None and stat_at_read.get(self.archive) == key:
+            self._files = files
+            return
+        reread(self)  # stat first: a change during the read re-reads next time
+        stat_at_read[self.archive] = key
+
+    invalidate_caches.skips_unchanged = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 _AQE_LOCK = threading.Lock()

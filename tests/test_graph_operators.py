@@ -126,6 +126,25 @@ def test_triangle_count_kron_vs_oracle(spark):
     assert got == expected
 
 
+def test_triangle_wedges_past_the_driver_gate_keep_the_distributed_plan(spark):
+    """K_30's 435 edges (6,960 bytes) fit a 100 kB driver gate but its
+    wedges do not: every degree ties, so the orientation goes by id,
+    out-degrees run 0..29 and there are C(30, 3) = 4,060 wedges at
+    WEDGE_BYTES each. The count must come from the distributed plan and
+    stay exact."""
+    from graphzeppelin_spark.operators.triangles import WEDGE_BYTES, _driver_triangle_rows
+
+    n = 30
+    edges_np = np.array([(u, v) for u in range(n) for v in range(u + 1, n)])
+    wedges = n * (n - 1) * (n - 2) // 6
+    gate = 100_000
+    assert len(edges_np) * 16 <= gate < wedges * WEDGE_BYTES
+    edges = edges_df(spark, edges_np)
+    assert _driver_triangle_rows(edges, gate) is None
+    got = triangle_count_df(edges, driver_finish_bytes=gate).collect()[0]["n_triangles"]
+    assert got == oracle.triangle_count(edges_np, n) == wedges
+
+
 def test_triangles_per_vertex_sums_to_3x(spark):
     n = 128
     s = kron_stream(scale=7, edge_factor=6, seed=4)

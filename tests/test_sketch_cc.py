@@ -119,6 +119,7 @@ def test_boruvka_moves_on_after_a_fail_only_group(spark, monkeypatch):
     state.count()
     real = kernel.SketchMatrix.sample_many
     calls = []
+    forced = []
 
     def first_call_fails(self, sample_idx):
         status, eid = real(self, sample_idx)
@@ -126,6 +127,7 @@ def test_boruvka_moves_on_after_a_fail_only_group(spark, monkeypatch):
             status = np.where(status == kernel.ZERO, kernel.ZERO, kernel.FAIL)
             status = status.astype(np.int8)
             eid[:] = 0
+            forced.append(int((status == kernel.FAIL).sum()))
         calls.append(sample_idx)
         return status, eid
 
@@ -134,6 +136,9 @@ def test_boruvka_moves_on_after_a_fail_only_group(spark, monkeypatch):
     monkeypatch.undo()
     state.unpersist()
     assert len(calls) > 1  # the finish ran past the FAILed group
+    finish = alg.last_boruvka_stats["rounds"][-1]
+    assert finish["kind"] == "driver_finish"
+    assert finish["fail_samples"] >= forced[0] > 0  # the forced FAILs are recorded
     edges_np = oracle.live_edges(s, n)
     np.testing.assert_array_equal(labels, oracle.connected_components(edges_np, n))
     assert oracle.spanning_forest_is_valid(forest, edges_np, n)
