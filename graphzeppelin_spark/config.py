@@ -29,6 +29,16 @@ from dataclasses import dataclass
 # collect to the driver only while their data provably fits this many bytes.
 DRIVER_BYTES = 64 * 1024 * 1024
 
+# bytes of one skinny two-long row (an edge (src, dst), a (vertex, label)
+# pair): the unit every row-counted driver gate sizes its collect in
+DRIVER_ROW_BYTES = 16
+
+
+def fits_driver(nbytes: int, budget: int) -> bool:
+    """The one driver-fit check: may `nbytes` of data be collected to the
+    driver under `budget`? A budget <= 0 disables every driver finish."""
+    return budget > 0 and nbytes <= budget
+
 
 @dataclass(frozen=True)
 class SketchConfig:

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphzeppelin_spark.config import DRIVER_BYTES
+from graphzeppelin_spark.config import DRIVER_BYTES, DRIVER_ROW_BYTES, fits_driver
 from graphzeppelin_spark.functions.edges import vertices_of
 
 
@@ -181,8 +181,8 @@ def connected_components_df(
             )
         )
 
-    finish_enabled = store is None and driver_finish_bytes > 0
-    if finish_enabled and cur_stats[0] * 16 <= driver_finish_bytes:
+    finish_enabled = store is None
+    if finish_enabled and fits_driver(cur_stats[0] * DRIVER_ROW_BYTES, driver_finish_bytes):
         remap = _driver_finish(cur)
         if checkpoint_each_round:
             from graphzeppelin_spark.session import free_local_checkpoint
@@ -252,7 +252,7 @@ def connected_components_df(
         if converged:
             break
         cur_stats = new_stats
-        if finish_enabled and cur_stats[0] * 16 <= driver_finish_bytes:
+        if finish_enabled and fits_driver(cur_stats[0] * DRIVER_ROW_BYTES, driver_finish_bytes):
             # the contracted set shrank under the gate: cut the convergence
             # tail (the remaining rounds are many tiny all-cluster jobs)
             remap = _driver_finish(cur)

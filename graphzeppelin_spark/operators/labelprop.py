@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from graphzeppelin_spark.config import DRIVER_BYTES
+from graphzeppelin_spark.config import DRIVER_BYTES, DRIVER_ROW_BYTES, fits_driver
 from graphzeppelin_spark.functions.edges import (
     fits_broadcast,
     stage_edges,
@@ -90,7 +90,7 @@ def label_propagation_df(
         and jump
         and checkpoint_dir is None
         and max_iters >= 2 * math.ceil(math.log2(max(n_verts, 2))) + 4
-        and (m_bi + n_verts) * 16 <= driver_finish_bytes
+        and fits_driver((m_bi + n_verts) * DRIVER_ROW_BYTES, driver_finish_bytes)
     ):
         import numpy as np
         import pandas as pd

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphzeppelin_spark.config import DRIVER_BYTES
+from graphzeppelin_spark.config import DRIVER_BYTES, DRIVER_ROW_BYTES, fits_driver
 from graphzeppelin_spark.functions.edges import (
     fits_broadcast,
     stage_edges,
@@ -190,7 +190,7 @@ def pagerank_df(
         num_iters is not None
         and store is None
         and not has_dangling
-        and (m_directed + n) * 16 <= driver_finish_bytes
+        and fits_driver((m_directed + n) * DRIVER_ROW_BYTES, driver_finish_bytes)
     ):
         import numpy as np
         import pandas as pd

@@ -20,11 +20,21 @@ The Spark rendering of the reference's CC pipeline (SURVEY.md §3.1):
 The query is one Boruvka step, repeated (reference boruvka_emulation and
 perform_boruvka_round, src/cc_sketch_alg.cpp:246-380 and 464-513): sum the
 member sketches of every active component over a fresh sample group
-(_root_sums, the one per-root reduce — round 0 skips it because every vertex
-is its own component), l0-sample each sum (_sample_frame), and union the GOOD
-samples' edges in a DSU (_boruvka_step). boruvka() runs the first rounds in
-Spark and finishes on the driver once the active components' slices fit
-DRIVER_BYTES; connected_components_distributed keeps the labels in Spark.
+(_sampled_components, the one per-root reduce — round 0 skips it because
+every vertex is its own component), l0-sample each sum (_sample_frame), and
+union the GOOD samples' edges in a DSU (_boruvka_step). boruvka() runs the first rounds in
+Spark and finishes on the driver once the member rows of every active
+component but the largest fit DRIVER_BYTES; connected_components_distributed
+keeps the labels in Spark.
+
+The driver finish never reads the largest component. Every update adds +eid
+at its lo endpoint and -eid at its hi endpoint, so the sketches of all
+vertices sum to zero, mod 2^64, in every bucket; a component that left the
+active set sampled ZERO (empty cut), so its sum is zero too. The largest
+active component's sum is therefore the negated sum of the other active
+components' (the complement rule, _finish_driver_side): at kron_15 the
+finish collects ~10-30 member rows where a per-root reduce read ~27k.
+
 All three loops stop by one rule (_boruvka_done):
 
   - a ZERO sample (det bucket zero: the component's cut is empty) drops its
@@ -58,7 +68,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from graphzeppelin_spark.config import DRIVER_BYTES, SketchConfig
+from graphzeppelin_spark.config import (
+    DRIVER_BYTES,
+    DRIVER_ROW_BYTES,
+    SketchConfig,
+    fits_driver,
+)
 from graphzeppelin_spark.sketch.dsu import NumpyDSU, driver_components
 from graphzeppelin_spark.sketch.kernel import (
     FAIL,
@@ -98,24 +113,17 @@ GROUPED_PARTIAL_SCHEMA = T.StructType(
     ]
 )
 
-# driver-finish collect rows: one DENSE flattened slice per component (the
-# driver parses these straight into the numpy accumulator)
-PARTIAL_SCHEMA = T.StructType(
-    [
-        T.StructField("root", T.LongType(), False),
-        T.StructField("sketch", T.BinaryType(), False),
-    ]
-)
-
 # driver-finish batching (see _finish_driver_side): FINISH_BATCH_GROUPS
-# sample groups per collected batch. Interleaved A/B at every probed regime
-# — kron_17 at 2406 and at 21 active components, the sf0.1 chain at 5165,
-# kron_21 at 305 — narrow 3-group batches beat or tie wider ones (kron_17
-# finish 1.39-1.76s vs 2.9-7.8s gate-sized; kron_21 9.1s vs 13.5s for 3 vs
-# 6 groups): the reduce scans and decodes the WHOLE state at the batch's
-# width regardless of active count, so wide batches pay full-state decode,
-# driver collect bytes and GC, while a narrow batch almost always converges
-# the tail anyway (components shrink geometrically).
+# sample groups per collected batch. boruvka()'s gate admits the finish once
+# the non-giant member rows fit the driver at the batch's width, so a narrow
+# batch starts it rounds earlier when no component dominates, and one narrow
+# batch almost always converges the tail. Interleaved runs, 4-core host,
+# local[4], labels exact on every call: on the sf0.1 chain (15k vertices, no
+# giant) 3 groups start the finish after round 0 (14,968 rows, 63 MB dense)
+# while all 17 remaining groups wait three more Spark rounds, query median
+# 1.16 vs 1.77 s, 3 won 5/5; on one persisted kron_15 state per seed (10
+# pairs, ~10-30 non-giant rows) it is a tie: seed 601 0.63 vs 0.67 s (3 won
+# 7/10), seed 602 0.56 vs 0.56 s (6/10), both converged in one batch.
 FINISH_BATCH_GROUPS = 3
 
 # sample groups consumed by boruvka's round 0 (every vertex samples its own
@@ -131,6 +139,8 @@ ROUND0_GROUPS = 2
 # MAX_VERTICES); SketchCC refuses anything larger.
 FUSED_KEY_MAX_N = 1 << 30
 MAX_VERTICES = 3_037_000_499  # largest n with n*n - 1 <= 2^63 - 1
+
+BUCKET_BYTES = 16  # one dense (alpha, gamma) uint64 bucket
 
 SAMPLE_SCHEMA = T.StructType(
     [
@@ -440,6 +450,11 @@ class SketchCC:
             -(-self.num_vertices // 2048),
         ))
 
+    def _slice_bytes(self, k: int) -> int:
+        """Bytes of one dense k-group slice (k groups' buckets + det)."""
+        g = self.geom
+        return (k * g.cols_per_sample * g.bkt_per_col + 1) * BUCKET_BYTES
+
     def _sliced(self, state: DataFrame, group_lo: int, group_hi: int) -> DataFrame:
         """JVM-side column pruning: keep only sample groups
         [group_lo, group_hi) (+ det) — the reference's range_merge pruning
@@ -463,12 +478,20 @@ class SketchCC:
         Returns (labels: int64[num_vertices] — component = min member id,
         forest: (m,2) int64 spanning-forest edges).
 
-        Once the per-component slices of a finish batch fit in
-        `driver_finish_bytes`, the tail rounds are finished driver-side in
-        numpy (_finish_driver_side) — components shrink geometrically, so
-        this removes the long tail of per-round Spark jobs while keeping
-        driver memory bounded (the reference's whole query is in-memory; we
-        only drop down when it provably fits).
+        Once the member rows a finish batch collects fit in
+        `driver_finish_bytes` as dense slices, the tail rounds are finished
+        driver-side in numpy (_finish_driver_side) — components shrink
+        geometrically, so this removes the long tail of per-round Spark jobs
+        while keeping driver memory bounded (the reference's whole query is
+        in-memory; we only drop down when it provably fits); until then the
+        rounds run in Spark. The gate counts the rows that reach the driver:
+        those of every active component but the largest, whose sum the
+        finish sets to the negated sum of the others (all vertex sketches
+        sum to zero, and components that sampled ZERO have zero sums).
+        `driver_finish_bytes=0` disables the finish.
+        `last_boruvka_stats["rounds"]` records each round; the
+        driver_finish entry also records what the finish skipped and
+        collected.
         """
         from graphzeppelin_spark.session import aqe_off
 
@@ -501,7 +524,6 @@ class SketchCC:
             state = state.persist()
             state.count()
 
-        slice_bytes_per_group = (g.cols_per_sample * g.bkt_per_col + 1) * 16
         active: np.ndarray | None = None  # None: every vertex its own component
         gidx = 0  # sample groups consumed
         rounds_stats: list[dict] = []
@@ -519,27 +541,30 @@ class SketchCC:
                 k = min(ROUND0_GROUPS, budget)
                 samples = self._sampled_vertices(state, 0, k)
             else:
-                # exact collected size: the finish pre-reduces per root
-                # distributively AND collects at most FINISH_BATCH_GROUPS
-                # groups per batch, so the driver receives exactly one slice
-                # row per active component per batch — the gate bounds the
-                # per-batch collect, which lets the finish engage with more
-                # components still active (fewer sequential distributed
-                # rounds; batching keeps the memory bound)
-                batch_est = min(budget - gidx, FINISH_BATCH_GROUPS)
-                if len(active) * batch_est * slice_bytes_per_group <= driver_finish_bytes:
+                # the finish collects the member rows of every active
+                # component but the largest, whose sum is the complement of
+                # the others' (_finish_driver_side); it starts once those
+                # rows fit the driver as dense slices, else one more round
+                # runs in Spark
+                members = _active_members(dsu.labels(), active)
+                verts, mroots, sizes = members
+                kb = min(budget - gidx, FINISH_BATCH_GROUPS)
+                est = (len(mroots) - int(sizes.max())) * self._slice_bytes(kb)
+                if fits_driver(est, driver_finish_bytes):
                     self.last_boruvka_stats["driver_finish_round"] = len(rounds_stats)
                     self.last_boruvka_stats["driver_finish_components"] = len(active)
-                    fails = self._finish_driver_side(state, active, gidx, budget, dsu, forest)
+                    finish = self._finish_driver_side(
+                        state, active, members, gidx, budget, dsu, forest
+                    )
                     rounds_stats.append(
                         {"round": len(rounds_stats), "kind": "driver_finish",
-                         "active": len(active), "fail_samples": fails,
+                         "active": len(active), **finish,
                          "sec": round(time.time() - t_round, 3)}
                     )
                     break
                 k = 1
                 samples = self._sampled_components(
-                    state, self._labels_df(dsu.labels(), active), gidx, gidx + 1
+                    state, self._labels_df(verts, mroots), gidx, gidx + 1
                 )
             gidx += k
             roots, status, eid = _collect_samples(samples)
@@ -557,19 +582,17 @@ class SketchCC:
             state.unpersist()
         return dsu.labels(), np.concatenate([np.empty((0, 2), np.int64), *forest])
 
-    def _root_sums(
-        self,
-        state: DataFrame,
-        labels_df: DataFrame,
-        group_lo: int,
-        group_hi: int,
-        tail,
-        schema: T.StructType,
+    def _sampled_components(
+        self, state: DataFrame, labels_df: DataFrame, group_lo: int, group_hi: int
     ) -> DataFrame:
-        """The one per-root reduce: sum the member sketches of every
-        component in labels_df over sample groups [group_lo, group_hi) plus
-        the deterministic bucket (last slot), then turn each final
-        partition's (roots, dense sums) into output rows with `tail`.
+        """(root, grp, status, eid) — one l0-sample per component per sample
+        group in [group_lo, group_hi), from the one per-root reduce: sum the
+        member sketches of every component in labels_df over those groups
+        plus the deterministic bucket (last slot), then sample each final
+        partition's dense sums (_sample_frame). Sampling k fresh groups
+        against one component partition is statistically equivalent to k
+        classic rounds' worth of samples and costs ONE distributed reduce
+        instead of k.
 
         Two vectorized stages: per-map-partition partial sums (emitted in
         the grouped-SPARSE layout, so the exchange ships ~nnz*18 bytes per
@@ -607,74 +630,100 @@ class SketchCC:
 
         def _final(batches):
             for pdf in _concat(batches):
-                yield tail(*_sum(pdf, "final"))
+                yield _sample_frame(g, *_sum(pdf, "final"), group_lo)
 
         return (
             joined.mapInPandas(_partial, schema=GROUPED_PARTIAL_SCHEMA)
             .repartition(self._query_parts(), "root")
-            .mapInPandas(_final, schema=schema)
+            .mapInPandas(_final, schema=SAMPLE_SCHEMA)
         )
 
     def _finish_driver_side(
         self,
         state: DataFrame,
         active: np.ndarray,
+        members: tuple,
         group_lo: int,
         budget: int,
         dsu: NumpyDSU,
         forest: list,
-    ) -> int:
-        """Collect per-component slices for the remaining sample groups (the
-        per-root reduce + one collect per BATCH) and run the remaining
-        Boruvka steps in pure numpy (reference cc_sketch_alg.cpp:464-513
-        analog). Each collect is exactly one row per active component — the
-        reduce runs distributed first, so boruvka()'s gate estimate is the
-        true collected size.
+    ) -> dict:
+        """Run the remaining Boruvka steps in pure numpy on per-component
+        slice sums brought to the driver once per BATCH of
+        FINISH_BATCH_GROUPS sample groups (reference cc_sketch_alg.cpp:464-
+        513 analog). `members` is _active_members of `active`.
 
-        Groups are collected in fixed narrow batches (FINISH_BATCH_GROUPS),
-        not all-remaining at once: the reduce scans and decodes the WHOLE
-        state at the batch's width regardless of how few components are
-        active, so wide batches pay in full-state decode, driver collect
-        bytes and GC, while a narrow batch almost always converges the tail
-        anyway (see the constant's A/B numbers). After every step the
-        collected slices are re-contracted through the step's merges — the
-        per-component sums are identical to a fresh reduce because the
-        slice aggregation commutes with DSU contraction (linear sketch) —
-        and a component whose det bucket is now zero has an empty cut
-        (ZERO) and leaves the active set. A later batch reduces over the
-        contracted (much smaller) active set.
+        The complement rule: every update adds +eid at its lo endpoint and
+        -eid at its hi endpoint in the same buckets, so the member sketches
+        of ALL vertices sum to zero, mod 2^64, in every bucket. Components
+        that left the active set sampled ZERO — det bucket zero, empty cut —
+        so their sums are zero (the ZERO premise), and the largest active
+        component's sum is the negated sum of the other active ones. Its
+        member rows are never read: the broadcast (vertex, root) map covers
+        the other components only, so the JVM join drops the largest one's
+        rows before the Arrow boundary, and one JVM-only job collects the
+        rest, which are summed per root here (no Python stage, no
+        exchange). boruvka()'s gate admits the first batch's rows; a later
+        batch's are never more, nor wider: the component holding the first
+        batch's largest one either stays active, and the largest is at
+        least its size, or sampled ZERO and left with all its rows.
 
-        Returns the number of FAIL samples over all the groups it ran."""
+        After every step the slices are re-contracted through the step's
+        merges — the per-component sums are identical to a fresh collect
+        because the slice aggregation commutes with DSU contraction (linear
+        sketch) — and a component whose det bucket is now zero has an empty
+        cut (ZERO) and leaves the active set. A later batch starts over from
+        the contracted active set and names its largest component afresh.
+
+        Returns the finish's record: FAIL samples over all groups run, and,
+        summed over batches, the largest components' member rows skipped
+        (giant_rows), the member rows collected, their estimated dense bytes
+        (the gate's measure) and their collected bytes."""
         g = self.geom
         gsz = g.cols_per_sample * g.bkt_per_col
-        fails = 0
+        rec = {"fail_samples": 0, "giant_rows": 0, "collected_rows": 0,
+               "est_bytes": 0, "collected_bytes": 0}
         while group_lo < budget and len(active) > 1:
             kb = min(budget - group_lo, FINISH_BATCH_GROUPS)
             slice_nb = kb * gsz + 1
-            rows = self._root_sums(
-                state, self._labels_df(dsu.labels(), active),
-                group_lo, group_lo + kb, _dense_rows, PARTIAL_SCHEMA,
-            ).collect()
+            if members is None:
+                members = _active_members(dsu.labels(), active)
+            verts, mroots, sizes = members
+            giant = int(np.argmax(sizes))
+            others = mroots != active[giant]
+            rows = self._sliced(state, group_lo, group_lo + kb).join(
+                self._labels_df(verts[others], mroots[others]), "vertex"
+            ).select("root", "det", "grp").collect()
             group_lo += kb
-            roots = np.array([r["root"] for r in rows], dtype=np.int64)
-            acc = np.frombuffer(
-                b"".join(r["sketch"] for r in rows), dtype=np.uint64
-            ).reshape(len(rows), slice_nb, 2).copy()
+            dets = [r["det"] for r in rows]
+            grps = [r["grp"] for r in rows]
+            rec["giant_rows"] += int(sizes[giant])
+            rec["collected_rows"] += len(rows)
+            rec["est_bytes"] += int(others.sum()) * self._slice_bytes(kb)
+            rec["collected_bytes"] += sum(map(len, dets)) + sum(
+                len(b) for row in grps for b in row
+            )
+            arr = decode_group_rows(dets, grps, kb, gsz, slice_nb)
+            roots = active
+            acc = np.zeros((len(roots), slice_nb, 2), dtype=np.uint64)
+            with np.errstate(over="ignore"):
+                np.add.at(acc, np.searchsorted(roots, [r["root"] for r in rows]), arr)
+                acc[giant] = np.negative(acc.sum(axis=0))  # acc[giant] is still 0
             slice_geom = _SliceGeom(g, slice_nb, kb)
             for gi in range(kb):
                 status, eid = SketchMatrix(slice_geom, len(roots), acc).sample_many(gi)
-                fails += int((status == FAIL).sum())
+                rec["fail_samples"] += int((status == FAIL).sum())
                 active, go = _boruvka_step(dsu, forest, self.num_vertices, roots, status, eid)
                 if not go:
-                    return fails
+                    return rec
                 uniq, inv = np.unique(dsu.find_many(roots), return_inverse=True)
                 merged = np.zeros((len(uniq), slice_nb, 2), dtype=np.uint64)
                 with np.errstate(over="ignore"):
                     np.add.at(merged, inv, acc)
                 nonzero = merged[:, -1].any(axis=1)  # sample_many's ZERO test
                 acc, roots = merged[nonzero], uniq[nonzero]
-            active = roots
-        return fails
+            active, members = roots, None
+        return rec
 
     def _sampled_vertices(
         self, state: DataFrame, group_lo: int, group_hi: int
@@ -703,31 +752,10 @@ class SketchCC:
             _sample, schema=SAMPLE_SCHEMA
         )
 
-    def _labels_df(self, labels: np.ndarray, active: np.ndarray | None):
-        """Broadcastable (vertex, root) map, restricted to active components."""
-        verts = np.arange(len(labels), dtype=np.int64)
-        if active is not None:
-            mask = np.isin(labels, active)
-            verts, roots = verts[mask], labels[mask]
-        else:
-            roots = labels
+    def _labels_df(self, verts: np.ndarray, roots: np.ndarray):
+        """Broadcastable (vertex, root) map."""
         return F.broadcast(
             self.spark.createDataFrame(pd.DataFrame({"vertex": verts, "root": roots}))
-        )
-
-    def _sampled_components(
-        self, state: DataFrame, labels_df: DataFrame, group_lo: int, group_hi: int
-    ) -> DataFrame:
-        """(root, grp, status, eid) — one l0-sample per component per sample
-        group in [group_lo, group_hi): the per-root reduce (_root_sums) with
-        a sampling tail. Sampling k fresh groups against one component
-        partition is statistically equivalent to k classic rounds' worth of
-        samples and costs ONE distributed reduce instead of k."""
-        geom = self.geom
-        return self._root_sums(
-            state, labels_df, group_lo, group_hi,
-            lambda roots, acc: _sample_frame(geom, roots, acc, group_lo),
-            SAMPLE_SCHEMA,
         )
 
     # ------------------------------------------------------------- public API
@@ -999,7 +1027,7 @@ class SketchCC:
         where the root moves: a driver numpy DSU when the edges fit
         `remap_driver_bytes` (bounded by the edges collected, never
         Θ(num_vertices)), else the exact star-contraction operator."""
-        if n_edges * 16 > remap_driver_bytes:
+        if not fits_driver(n_edges * DRIVER_ROW_BYTES, remap_driver_bytes):
             from graphzeppelin_spark.operators.connectivity import (
                 connected_components_df,
             )
@@ -1154,6 +1182,15 @@ def _boruvka_step(
     return active, not _boruvka_done(len(active), int(tree.sum()), failed)
 
 
+def _active_members(labels: np.ndarray, active: np.ndarray) -> tuple:
+    """(vertex, root, size): the members of the components in `active` (its
+    sorted roots) as (vertex, root) arrays, and each component's member
+    count — one pass over the label array."""
+    verts = np.flatnonzero(np.isin(labels, active))
+    roots = labels[verts]
+    return verts, roots, np.bincount(np.searchsorted(active, roots), minlength=len(active))
+
+
 def _collect_samples(samples: DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Collect a sample frame's non-ZERO rows as (root, status, eid) arrays.
     ZERO rows (isolated vertices, usually most of a web graph, and closed
@@ -1190,9 +1227,3 @@ def _sample_frame(
         )
     return pd.concat(frames, ignore_index=True)
 
-
-def _dense_rows(roots: np.ndarray, acc: np.ndarray) -> pd.DataFrame:
-    """(root, sketch) rows: one dense flattened slice per component, which
-    the driver finish parses straight into its numpy accumulator."""
-    flat = acc.reshape(len(roots), -1)
-    return pd.DataFrame({"root": roots, "sketch": [row.tobytes() for row in flat]})

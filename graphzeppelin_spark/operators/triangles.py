@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphzeppelin_spark.config import DRIVER_BYTES
+from graphzeppelin_spark.config import DRIVER_BYTES, DRIVER_ROW_BYTES, fits_driver
 from graphzeppelin_spark.functions.edges import degrees
 
 # driver bytes held per wedge at the peak of the driver-side plan: the ten
@@ -74,7 +74,7 @@ def _driver_triangle_rows(edges: DataFrame, driver_finish_bytes: int):
     staged = edges.select("src", "dst").persist()  # gate count + collect: one plan run
     try:
         m = staged.count()
-        if m * 16 > driver_finish_bytes:
+        if not fits_driver(m * DRIVER_ROW_BYTES, driver_finish_bytes):
             return None
         pdf = staged.toPandas()
     finally:
@@ -95,7 +95,7 @@ def _driver_triangle_rows(edges: DataFrame, driver_finish_bytes: int):
     # materializing it
     _, ocnt = np.unique(u, return_counts=True) if len(u) else (None, np.zeros(0, np.int64))
     wedges = int((ocnt.astype(np.int64) * (ocnt - 1) // 2).sum())
-    if wedges * WEDGE_BYTES > driver_finish_bytes:
+    if not fits_driver(wedges * WEDGE_BYTES, driver_finish_bytes):
         return None
     uniq, indptr, indices = _csr_from_pairs(u, w)
     v1, v2, apex = _wedges_from_csr(uniq, indptr, indices)

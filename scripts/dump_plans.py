@@ -51,7 +51,8 @@ def main() -> None:
     alg = SketchCC(spark, num_vertices=1024, seed=7)
     plans["sketch_build_state"] = fmt(alg.build_state(stream))
     state = alg.build_state(stream).localCheckpoint(eager=True)
-    labels_df = alg._labels_df(np.arange(1024, dtype=np.int64), None)
+    v = np.arange(1024, dtype=np.int64)
+    labels_df = alg._labels_df(v, v)  # every vertex its own root
     plans["sketch_boruvka_round"] = fmt(alg._sampled_components(state, labels_df, 0, 1))
 
     for name, plan in plans.items():

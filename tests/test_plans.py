@@ -96,7 +96,8 @@ def test_sampled_components_shuffle_is_pruned(spark, parquet_stream):
 
     alg = SketchCC(spark, num_vertices=256, seed=3)
     state = alg.build_state(parquet_stream).localCheckpoint(eager=True)
-    labels_df = alg._labels_df(np.arange(256, dtype=np.int64), None)
+    v = np.arange(256, dtype=np.int64)
+    labels_df = alg._labels_df(v, v)  # every vertex its own root
     plan = _plan(alg._sampled_components(state, labels_df, 0, 1))
     # formatted-explain details are numbered in execution order
     i_partial = plan.index("_partial(")

@@ -8,7 +8,9 @@ import pytest
 
 from graphzeppelin_spark import oracle
 from graphzeppelin_spark.operators.sketch_cc import SketchCC
+from graphzeppelin_spark.sketch.kernel import decode_group_rows
 from graphzeppelin_spark.sources.generators import (
+    _stream_pdf,
     dynamic_erdos_stream,
     kron_stream,
     multiples_graph_stream,
@@ -138,10 +140,28 @@ def test_boruvka_moves_on_after_a_fail_only_group(spark, monkeypatch):
     assert len(calls) > 1  # the finish ran past the FAILed group
     finish = alg.last_boruvka_stats["rounds"][-1]
     assert finish["kind"] == "driver_finish"
+    for key in ("giant_rows", "collected_rows", "est_bytes", "collected_bytes"):
+        assert key in finish  # the finish's gate decision is recorded
     assert finish["fail_samples"] >= forced[0] > 0  # the forced FAILs are recorded
     edges_np = oracle.live_edges(s, n)
     np.testing.assert_array_equal(labels, oracle.connected_components(edges_np, n))
     assert oracle.spanning_forest_is_valid(forest, edges_np, n)
+
+
+def test_zero_driver_budget_disables_the_finish(spark):
+    """fits_driver admits nothing under a zero budget, so boruvka runs every
+    round in Spark — with the same labels."""
+    from graphzeppelin_spark.config import fits_driver
+
+    assert fits_driver(16, 16) and not fits_driver(17, 16) and not fits_driver(0, 0)
+    n = 128
+    s = multiples_graph_stream(n)
+    alg = SketchCC(spark, num_vertices=n, seed=7)
+    labels, _ = alg.boruvka(alg.build_state(stream_df(spark, s)), driver_finish_bytes=0)
+    assert {r["kind"] for r in alg.last_boruvka_stats["rounds"]} == {"distributed"}
+    np.testing.assert_array_equal(
+        labels, oracle.connected_components(oracle.live_edges(s, n), n)
+    )
 
 
 def test_vertex_id_limit_fails_loudly(spark):
@@ -151,3 +171,155 @@ def test_vertex_id_limit_fails_loudly(spark):
     SketchCC(spark, num_vertices=3_037_000_499)
     with pytest.raises(ValueError, match="overflow int64"):
         SketchCC(spark, num_vertices=3_037_000_500)
+
+
+# --------------------------------------------------- the zero-sum invariant
+# Every update adds +eid at its lo endpoint and -eid at its hi endpoint, so
+# all vertex sketches of a state sum to zero, mod 2^64, in every bucket —
+# the premise of boruvka()'s complement finish, which never reads the
+# largest component's rows.
+
+
+def _state_sum(alg, state) -> np.ndarray:
+    """Sum of every row of `state`, decoded at full width (uint64 wraps)."""
+    g = alg.geom
+    rows = state.collect()
+    assert rows
+    arr = decode_group_rows(
+        [r["det"] for r in rows], [r["grp"] for r in rows],
+        g.num_samples, g.cols_per_sample * g.bkt_per_col, g.num_buckets,
+    )
+    return arr.sum(axis=0)
+
+
+VARIANTS = pytest.mark.parametrize("variant", ["cameo", "cubesketch"])
+
+
+@VARIANTS
+def test_built_state_sums_to_zero(spark, variant):
+    s = dynamic_erdos_stream(num_vertices=128, density=0.05, rounds=3, seed=21)
+    assert (s["type"] == 1).sum() > 0
+    alg = SketchCC(spark, num_vertices=128, seed=7, variant=variant)
+    assert not _state_sum(alg, alg.build_state(stream_df(spark, s))).any()
+
+
+@VARIANTS
+def test_merged_delta_states_sum_to_zero(spark, variant):
+    """Two delta builds where the second deletes edges the first inserted:
+    each delta and their merge sum to zero."""
+    rng = np.random.default_rng(5)
+    n = 96
+    a = rng.integers(0, n, size=(300, 2))
+    a = np.unique(np.sort(a[a[:, 0] != a[:, 1]], axis=1), axis=0)
+    b = rng.integers(0, n, size=(100, 2))
+    b = np.unique(np.sort(b[b[:, 0] != b[:, 1]], axis=1), axis=0)
+    b = b[~(b[:, None, :] == a[None, :, :]).all(-1).any(1)]  # fresh inserts only
+    dels = a[::3]
+    first = _stream_pdf(np.zeros(len(a)), a[:, 0], a[:, 1])
+    both = np.concatenate([dels, b])
+    types = np.concatenate([np.ones(len(dels)), np.zeros(len(b))])
+    second = _stream_pdf(types, both[:, 0], both[:, 1])
+    alg = SketchCC(spark, num_vertices=n, seed=7, variant=variant)
+    d1 = alg.build_state(stream_df(spark, first))
+    d2 = alg.build_state(stream_df(spark, second))
+    for st in (d1, d2, alg.merge_states(d1, d2)):
+        assert not _state_sum(alg, st).any()
+
+
+def _er_block(rng, lo: int, size: int, p: float) -> np.ndarray:
+    """Erdős–Rényi G(size, p) edges on vertices [lo, lo + size)."""
+    iu = np.triu_indices(size, 1)
+    keep = rng.random(len(iu[0])) < p
+    return np.stack([iu[0][keep], iu[1][keep]], axis=1) + lo
+
+
+def _bridged(rng, giant: int, p_giant: float, blobs: list, p_blob: float) -> np.ndarray:
+    """An ER giant on [0, giant) plus ER blobs of the given sizes after it,
+    each joined to the giant by ONE bridge edge — round 0 rarely samples a
+    bridge, so the blobs are still separate active pieces at the finish."""
+    parts, lo = [_er_block(rng, 0, giant, p_giant)], giant
+    for size in blobs:
+        parts.append(_er_block(rng, lo, size, p_blob))
+        parts.append(np.array([[int(rng.integers(giant)), lo]]))
+        lo += size
+    return np.concatenate(parts)
+
+
+def _check_finish(spark, monkeypatch, edges: np.ndarray, n: int, **boruvka_kwargs) -> dict:
+    """Run boruvka with every sample but the largest active component's
+    FAILed after round 0, so every merge of the finish comes from the
+    largest component's sum — the complement — and labels are exact only
+    if that sum is. Checks labels and forest against the oracle."""
+    from graphzeppelin_spark.operators import sketch_cc
+    from graphzeppelin_spark.sketch import kernel
+
+    real = sketch_cc._boruvka_step
+    giant_goods = []
+
+    def giant_only(dsu, forest, n, roots, status, eid):
+        if giant_goods:  # not round 0
+            giant = np.argmax(np.bincount(dsu.labels()))  # largest component's root
+            forced = (status != kernel.ZERO) & (roots != giant)
+            status = np.where(forced, kernel.FAIL, status).astype(status.dtype)
+            eid = np.where(forced, 0, eid).astype(eid.dtype)
+            giant_goods[0] += int((status == kernel.GOOD).sum())
+        else:
+            giant_goods.append(0)
+        return real(dsu, forest, n, roots, status, eid)
+
+    s = _stream_pdf(np.zeros(len(edges)), edges[:, 0], edges[:, 1])
+    alg = SketchCC(spark, num_vertices=n, seed=7)
+    state = alg.build_state(stream_df(spark, s))
+    monkeypatch.setattr(sketch_cc, "_boruvka_step", giant_only)
+    labels, forest = alg.boruvka(state, **boruvka_kwargs)
+    monkeypatch.undo()
+    edges_np = oracle.live_edges(s, n)
+    np.testing.assert_array_equal(labels, oracle.connected_components(edges_np, n))
+    assert oracle.spanning_forest_is_valid(forest, edges_np, n)
+    finish = alg.last_boruvka_stats["rounds"][-1]
+    assert finish["kind"] == "driver_finish"
+    assert finish["giant_rows"] > 0  # the largest component's rows were skipped
+    assert giant_goods[0] > 0  # ... and its complement sum merged something
+    return finish
+
+
+def test_complement_finish_giant_with_pendant_pairs(spark, monkeypatch):
+    """An ER giant with bridged blobs, plus pendant pairs (components of
+    two, still active entering the finish): the finish collects only the
+    non-giant rows and the giant's complement sum merges the blobs."""
+    rng = np.random.default_rng(31)
+    edges = _bridged(rng, 200, 0.08, [25] * 4, 0.4)
+    pairs = np.stack([np.arange(300, 320, 2), np.arange(301, 321, 2)], axis=1)
+    finish = _check_finish(spark, monkeypatch, np.concatenate([edges, pairs]), 330)
+    assert finish["collected_rows"] < finish["giant_rows"]
+
+
+def test_finish_gate_counts_the_non_giant_member_rows(spark):
+    """boruvka()'s gate counts the member rows the finish collects — every
+    active component's but the largest's. After round 0, two 150-vertex
+    blobs, each hanging off a 650-vertex giant by one bridge, are still
+    apart: a budget of exactly their 300 rows starts the finish, one row
+    less runs round 1 in Spark. Labels stay exact either way."""
+    from graphzeppelin_spark.operators.sketch_cc import FINISH_BATCH_GROUPS, ROUND0_GROUPS
+
+    rng = np.random.default_rng(17)
+    edges = _bridged(rng, 500, 0.03, [150] * 3, 0.08)
+    n = 960
+    s = _stream_pdf(np.zeros(len(edges)), edges[:, 0], edges[:, 1])
+    edges_np = oracle.live_edges(s, n)
+    alg = SketchCC(spark, num_vertices=n, seed=7)
+    state = alg.build_state(stream_df(spark, s)).persist()
+    row = alg._slice_bytes(min(alg.geom.num_samples - ROUND0_GROUPS, FINISH_BATCH_GROUPS))
+    rounds = {}
+    for rows in (300, 299):
+        labels, forest = alg.boruvka(state, driver_finish_bytes=rows * row)
+        np.testing.assert_array_equal(labels, oracle.connected_components(edges_np, n))
+        assert oracle.spanning_forest_is_valid(forest, edges_np, n)
+        rounds[rows] = alg.last_boruvka_stats["rounds"]
+        assert rounds[rows][0]["active"] == 3
+    finish = rounds[300][1]
+    assert finish["kind"] == "driver_finish"
+    assert (finish["giant_rows"], finish["collected_rows"]) == (650, 300)
+    assert finish["est_bytes"] == 300 * row
+    assert rounds[299][1]["kind"] == "distributed"  # merged the blobs in Spark
+    state.unpersist()
