@@ -7,7 +7,9 @@ The Spark rendering of the reference's CC pipeline (SURVEY.md §3.1):
   guttering system shuffle by vertex           repartition(vertex) + mapInPandas
   delta sketches + locked merge                per-partition SketchMatrix build
                                                (partition == final owner, so no
-                                               second merge on first build)
+                                               second merge); a later batch
+                                               folds into the state rows in
+                                               the same python stage
   boruvka round: group members by root,        prune to round's sample-group
   range_merge + sample (OpenMP)                columns (the range_merge column
                                                pruning, done BEFORE the shuffle)
@@ -47,9 +49,12 @@ All three loops stop by one rule (_boruvka_done):
 
 State is a DataFrame (vertex: long, det: binary, grp: array<binary>) — the
 Spark image of the reference's Bucket* arrays, laid out one sparse blob per
-sample group (see STATE_SCHEMA) — checkpointable to parquet at any point and
-mergeable with later micro-batch deltas because the sketch is a linear
-aggregate (streaming/driver.py builds on this).
+sample group (see STATE_SCHEMA) — checkpointable to parquet at any point.
+The sketch is a linear aggregate, so a later micro-batch folds straight
+into it: build_state(batch, base=state) decodes each state row into its
+vertex's dense slot, adds the batch's updates and encodes once
+(streaming/driver.py builds on this); merge_states sums two states in the
+same stage.
 
 Scale notes: the only full-width shuffle is the initial repartition(vertex)
 (the reference's gutter shuffle). Boruvka rounds ship pruned slices
@@ -81,6 +86,7 @@ from graphzeppelin_spark.sketch.kernel import (
     ZERO,
     SketchGeometry,
     SketchMatrix,
+    add_group_rows,
     cached_zero_buckets,
     decode_edges,
     decode_group_rows,
@@ -217,13 +223,13 @@ class SketchCC:
         malformed there too). Under that contract the signed sum per
         (vertex, edge) over ANY stream slice lies in {-1, 0, +1} and equals
         the slice's occurrence-parity contribution, which is what makes
-        toggle semantics compose with the linear merge of micro-batch deltas
+        toggle semantics compose with folding micro-batches into the state
         (an insert in batch k cancels a delete in batch k+1 bucket-for-bucket
-        when the states merge — the role XOR plays in the reference). The
+        when batch k+1 folds in — the role XOR plays in the reference). The
         |net| > 1 guard (_net_guard) catches malformed updates WITHIN one
-        stream slice; a malformation split across separately built slices
+        stream slice; a malformation split across separately folded slices
         (e.g. two inserts of one edge in different micro-batches, each
-        netting +1) is invisible to it and corrupts the merged state —
+        netting +1) is invisible to it and corrupts the folded state —
         cross-batch well-formedness is the producer's contract, exactly as
         the reference's stream readers assume an alternating stream per
         edge. Each undirected update hits both endpoints (the reference's
@@ -301,10 +307,12 @@ class SketchCC:
         return both.repartition(self.num_partitions, "vertex")
 
     def _packed_skeys(self, stream: DataFrame) -> DataFrame:
-        """One-column net updates for the build hot path: ``o`` int64 rows,
-        hash-partitioned by vertex, carrying the SAME information as
-        packed_updates' (vertex, seid) — the vertex is recomputed from the
-        edge id instead of shipped.
+        """Net updates for the build hot path as (vertex, o) int64 rows,
+        hash-partitioned by vertex; ``o`` alone carries the SAME information
+        as packed_updates' (vertex, seid). A first build selects ``o`` only
+        and recomputes the vertex from the edge id instead of shipping it; a
+        fold keeps the grouping's ``vertex`` to repartition its union with
+        the base state rows.
 
         Encoding: a gross incidence row is ``skey = u * (eid*2 + is_hi)``
         where u is the update sign, eid = lo*n + hi, and is_hi says which
@@ -350,15 +358,18 @@ class SketchCC:
             ).alias("net")
         )
         guarded = grouped.select(
-            "akey", "net", F.shiftright(F.col("akey"), 1).alias("eid")
+            "v", "akey", "net", F.shiftright(F.col("akey"), 1).alias("eid")
         ).where(self._net_guard())
         agm = F.when(
             F.col("akey").bitwiseAND(F.lit(1)) == 1, -F.col("net")
         ).otherwise(F.col("net"))
-        return guarded.select((agm * F.col("akey")).alias("o"))
+        return guarded.select(
+            F.col("v").alias("vertex"), (agm * F.col("akey")).alias("o")
+        )
 
-    def build_state(self, stream: DataFrame) -> DataFrame:
-        """Build the (vertex, det, grp) state table from a full stream slice.
+    def build_state(self, stream: DataFrame, base: DataFrame | None = None) -> DataFrame:
+        """Build the (vertex, det, grp) state table from a stream slice, or
+        fold the slice into an existing state `base`.
 
         The JVM net-multiplicity aggregation between the exchange and the
         python stage stays DELIBERATELY (round-8 interleaved A/B): the Arrow
@@ -370,60 +381,97 @@ class SketchCC:
 
         For num_vertices <= FUSED_KEY_MAX_N the exchange + Arrow rows are
         the fused one-column encoding (_packed_skeys); the state produced is
-        byte-identical either way (checksum-pinned regression test)."""
+        byte-identical either way (checksum-pinned regression test).
+
+        With `base`, the slice's net rows keep their vertex, are unioned
+        with the base rows (tagged key 0: edge ids are >= 1, so no update
+        row has key 0) and repartitioned by vertex once, and ONE python
+        stage decodes the base rows into their vertices' dense slots, runs
+        the kernel over the updates and encodes once (_sketch_stage). The
+        result is byte-identical to merge_states(base, build_state(stream))
+        without encoding, shuffling and decoding a delta state: on a 4-core
+        host a later kron_14 micro-batch of ~259k updates went from 4.7-5.6 s
+        to 3.4-3.9 s, commit and eager DSU included."""
+        fused = self.num_vertices <= FUSED_KEY_MAX_N
+        # both inputs are already hash-partitioned by vertex
+        updates = self._packed_skeys(stream) if fused else self.packed_updates(stream)
+        key = "o" if fused else "seid"
+        if base is None:
+            return self._sketch_stage(updates.select("o") if fused else updates)
+        # update rows carry EMPTY blobs, not nulls: Spark's Arrow writer took
+        # ~15x longer (16 s vs 1.2 s, kron_14 batch) to ship null det/grp
+        # values mixed with the state rows' blobs
+        rows = base.select(
+            "vertex", "det", "grp", F.lit(0).cast("long").alias(key)
+        ).unionAll(
+            updates.select(
+                "vertex",
+                F.lit(b"").alias("det"),
+                F.array().cast(T.ArrayType(T.BinaryType())).alias("grp"),
+                key,
+            )
+        )
+        return self._sketch_stage(rows.repartition(self.num_partitions, "vertex"))
+
+    def merge_states(self, a: DataFrame, b: DataFrame) -> DataFrame:
+        """Additive merge of two state tables (linear-sketch property): the
+        fold's python stage over the two states' rows and no updates."""
+        both = a.select("vertex", "det", "grp").unionAll(b.select("vertex", "det", "grp"))
+        return self._sketch_stage(both.repartition(self.num_partitions, "vertex"))
+
+    def _sketch_stage(self, rows: DataFrame) -> DataFrame:
+        """The one python stage of build, fold and merge, over rows that
+        are hash-partitioned by vertex. Its columns say what each row is:
+
+        - ``o`` (fused key, o = +-(eid*2 + is_hi)) or ``seid`` (signed
+          eid): an update row; a first build ships ``o`` without its
+          vertex, which the stage recomputes from eid and is_hi;
+        - ``det``/``grp``: a state row, key 0 when a key column exists.
+          State rows are decoded into their vertex's slot and summed, so
+          two rows of one vertex (merge_states) add up.
+
+        Every vertex of a partition gets one dense SketchMatrix row, the
+        kernel adds the updates, and the matrix is encoded once."""
         geom = self.geom
         n = self.num_vertices
         gsz = geom.cols_per_sample * geom.bkt_per_col
         n_groups = geom.num_samples
-        fused = n <= FUSED_KEY_MAX_N
-        # both inputs are already hash-partitioned by vertex
-        updates = self._packed_skeys(stream) if fused else self.packed_updates(stream)
+        cols = set(rows.columns)
+        key_col = "o" if "o" in cols else "seid" if "seid" in cols else None
+        shift = np.uint64(1 if key_col == "o" else 0)
+        has_vertex, has_state = "vertex" in cols, "det" in cols
 
-        def _build(batches):
+        def _apply(batches):
             for pdf in _concat(batches):
-                if fused:
-                    o = pdf["o"].to_numpy(np.int64)
-                    signs = np.where(o >= 0, np.int64(1), np.int64(-1))
-                    akey = np.abs(o).astype(np.uint64)
-                    eids = akey >> np.uint64(1)
+                if key_col is None:
+                    key = np.zeros(len(pdf), dtype=np.int64)
+                else:
+                    key = pdf[key_col].to_numpy(np.int64)
+                akey = np.abs(key).astype(np.uint64)
+                eids = akey >> shift
+                if has_vertex:
+                    verts = pdf["vertex"].to_numpy(np.int64)
+                else:
                     is_hi = (akey & np.uint64(1)).astype(bool)
                     lo = (eids // np.uint64(n)).astype(np.int64)
                     hi = (eids % np.uint64(n)).astype(np.int64)
                     verts = np.where(is_hi, hi, lo)
-                else:
-                    verts = pdf["vertex"].to_numpy(np.int64)
-                    seid = pdf["seid"].to_numpy(np.int64)
-                    signs = np.where(seid >= 0, np.int64(1), np.int64(-1))
-                    eids = np.abs(seid).astype(np.uint64)
                 uniq, inv = np.unique(verts, return_inverse=True)
                 sm = SketchMatrix(geom, len(uniq), reuse_slot="build")
+                if has_state:
+                    old = key == 0
+                    add_group_rows(
+                        sm.buckets, inv[old], pdf["det"][old].tolist(),
+                        pdf["grp"][old].tolist(), gsz,
+                    )
+                    new = ~old
+                    key, eids, inv = key[new], eids[new], inv[new]
+                signs = np.where(key >= 0, np.int64(1), np.int64(-1))
                 sm.update_many(inv, eids, signs=signs)
                 dets, grps = encode_group_rows(sm.buckets, gsz, n_groups)
                 yield pd.DataFrame({"vertex": uniq, "det": dets, "grp": grps})
 
-        return updates.mapInPandas(_build, schema=STATE_SCHEMA)
-
-    def merge_states(self, a: DataFrame, b: DataFrame) -> DataFrame:
-        """Additive merge of two state tables (linear-sketch property)."""
-        geom = self.geom
-        gsz = geom.cols_per_sample * geom.bkt_per_col
-        n_groups = geom.num_samples
-        both = a.unionAll(b).repartition(self.num_partitions, "vertex")
-
-        def _merge(batches):
-            for pdf in _concat(batches):
-                verts = pdf["vertex"].to_numpy(np.int64)
-                uniq, inv = np.unique(verts, return_inverse=True)
-                arr = decode_group_rows(
-                    pdf["det"].tolist(), pdf["grp"].tolist(),
-                    n_groups, gsz, geom.num_buckets, reuse_slot="gdec_merge",
-                )
-                sm = SketchMatrix(geom, len(arr), arr)
-                groups, combined = sm.merged_by_group(inv, reuse_slot="merge")
-                dets, grps = encode_group_rows(combined, gsz, n_groups)
-                yield pd.DataFrame({"vertex": uniq, "det": dets, "grp": grps})
-
-        return both.mapInPandas(_merge, schema=STATE_SCHEMA)
+        return rows.mapInPandas(_apply, schema=STATE_SCHEMA)
 
     # ------------------------------------------------------------------ query
 
@@ -1064,8 +1112,9 @@ class SketchCC:
         KSPANNINGFORESTS, cc_sketch_alg.h:60-63 / exhaustive_sample use).
 
         Round i extracts a forest from the current state, then *deletes* its
-        edges via a linear delta merge — valid because the sketch is an
-        invertible aggregate, exactly how the reference peels forests."""
+        edges by folding their deletes into the state — valid because the
+        sketch is an invertible aggregate, exactly how the reference peels
+        forests."""
         spark = self.spark
         forests: list[np.ndarray] = []
         cur = state
@@ -1084,8 +1133,7 @@ class SketchCC:
                     }
                 )
             )
-            delta = self.build_state(del_stream)
-            cur = self.merge_states(cur, delta).localCheckpoint(eager=True)
+            cur = self.build_state(del_stream, base=cur).localCheckpoint(eager=True)
         return forests
 
     def component_sets(self, state: DataFrame) -> DataFrame:

@@ -330,23 +330,6 @@ class SketchMatrix:
         """buckets[dst] += other.buckets[src] (bucket-wise additive merge)."""
         np.add.at(self.buckets, np.asarray(dst_rows), other.buckets[np.asarray(src_rows)])
 
-    def merged_by_group(
-        self, groups: np.ndarray, reuse_slot: str | None = None
-    ) -> tuple[np.ndarray, np.ndarray]:
-        """Additively combine rows sharing a group key.
-
-        Returns (unique_groups, combined buckets (g, num_buckets, 2)).
-        This is the supernode merge of a Boruvka round.
-        """
-        groups = np.asarray(groups)
-        uniq, inv = np.unique(groups, return_inverse=True)
-        if reuse_slot is not None:
-            out = cached_zero_buckets(self.buckets.shape[1], len(uniq), reuse_slot)
-        else:
-            out = np.zeros((len(uniq),) + self.buckets.shape[1:], dtype=np.uint64)
-        np.add.at(out, inv, self.buckets)
-        return uniq, out
-
     # -- sampling ----------------------------------------------------------
 
     def _good_resolve(
@@ -501,17 +484,29 @@ def decode_group_rows(
 ) -> np.ndarray:
     """Decode k-group rows back to a dense (n, out_nbuckets, 2) matrix with
     group j's buckets at [j*gsz, (j+1)*gsz) and det in the last slot —
-    the layout _SliceGeom samples. grp_lists holds per-row sequences of k blobs (a JVM-side
-    slice of the state's grp array). reuse_slot: decode into a process-
-    cached buffer (cached_zero_buckets contract — the returned matrix is
-    invalidated by the next same-slot call)."""
+    the layout _SliceGeom samples; out_nbuckets = k*gsz + 1. grp_lists
+    holds per-row sequences of k blobs (a JVM-side slice of the state's
+    grp array). reuse_slot: decode into a process-cached buffer
+    (cached_zero_buckets contract — the returned matrix is invalidated by
+    the next same-slot call)."""
     n = len(grp_lists)
     if reuse_slot is not None:
         out = cached_zero_buckets(out_nbuckets, n, reuse_slot)
     else:
         out = np.zeros((n, out_nbuckets, 2), dtype=np.uint64)
-    if n == 0:
-        return out
+    add_group_rows(out, np.arange(n), det_blobs, grp_lists, gsz)
+    return out
+
+
+def add_group_rows(out: np.ndarray, rows: np.ndarray, det_blobs, grp_lists, gsz: int) -> None:
+    """out[rows[i]] += encoded row i, decoded at out's width (k =
+    (width - 1) // gsz groups, det in the last slot). A slot named twice
+    gets the sum of its rows: the additive merge of linear sketches. Flat
+    1-D add.at scatters: as fast as a fancy-index assignment of the same
+    items."""
+    n = len(grp_lists)
+    nb = out.shape[1]
+    k = (nb - 1) // gsz
     flat = [b for row in grp_lists for b in row]
     nnz = np.fromiter((len(b) for b in flat), dtype=np.int64, count=n * k)
     nnz //= GROUP_ITEM_BYTES
@@ -521,17 +516,17 @@ def decode_group_rows(
         a_parts.append(b[2 * m : 10 * m])
         g_parts.append(b[10 * m :])
     idx_all = np.frombuffer(b"".join(idx_parts), dtype=np.uint16).astype(np.int64)
-    aa = np.frombuffer(b"".join(a_parts), dtype=np.uint64)
-    gg = np.frombuffer(b"".join(g_parts), dtype=np.uint64)
     seg = np.arange(n * k, dtype=np.int64)
-    row_rep = np.repeat(seg // k, nnz)
-    dst = np.repeat((seg % k) * gsz, nnz) + idx_all
-    out[row_rep, dst, 0] = aa
-    out[row_rep, dst, 1] = gg
+    rows = np.asarray(rows, dtype=np.int64)
+    idx = np.repeat(rows[seg // k] * nb + (seg % k) * gsz, nnz) + idx_all
+    alpha = out[..., 0].reshape(-1)
+    gamma = out[..., 1].reshape(-1)
+    np.add.at(alpha, idx, np.frombuffer(b"".join(a_parts), dtype=np.uint64))
+    np.add.at(gamma, idx, np.frombuffer(b"".join(g_parts), dtype=np.uint64))
     det = np.frombuffer(b"".join(det_blobs), dtype=np.uint64).reshape(n, 2)
-    out[:, -1, 0] = det[:, 0]
-    out[:, -1, 1] = det[:, 1]
-    return out
+    idx = rows * nb + (nb - 1)
+    np.add.at(alpha, idx, det[:, 0])
+    np.add.at(gamma, idx, det[:, 1])
 
 
 def encode_edges(src: np.ndarray, dst: np.ndarray, num_vertices: int) -> np.ndarray:

@@ -7,8 +7,10 @@ src/cc_sketch_alg.cpp:79-104):
 - the stream is a seq-ordered DataFrame of (seq, type, src, dst) toggle
   updates; `process_stream_until(k)` applies micro-batches of updates with
   seq < k (the reference's breakpoint mechanism, graph_sketch_driver.h:141-191);
-- per batch the sketch state advances by a *linear merge* with the batch
-  delta (sketches are additive), so ingest is incremental and replayable;
+- per batch the batch's net updates fold straight into the sketch state in
+  one python stage (SketchCC.build_state with a base; sketches are
+  additive, so no separate delta state is built or merged), so ingest is
+  incremental and replayable;
 - an eager driver-side DSU answers connectivity queries instantly during
   insert-dominant stretches; it is invalidated when a batch deletes a current
   spanning-forest edge and repopulated by the next Boruvka query — exactly
@@ -24,7 +26,7 @@ import threading
 from concurrent.futures import Future, ThreadPoolExecutor
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from graphzeppelin_spark.config import DriverConfig, SketchConfig
@@ -79,7 +81,7 @@ class GraphStreamDriver:
         # opt-in CROSS-BATCH stream validation (the one malformation class
         # the |net|>1 in-slice guard cannot see: two inserts of one edge in
         # DIFFERENT micro-batches each net +1 and silently corrupt the
-        # merged state — SketchCC._canonical_updates docstring). The
+        # folded state — SketchCC._canonical_updates docstring). The
         # reference assumes an alternating stream per edge at the producer;
         # this engine can additionally CHECK it, because unlike the
         # reference it already materializes distributed per-batch tables: a
@@ -111,8 +113,8 @@ class GraphStreamDriver:
             return
         lo = self.applied_seq
         # watermark advances PER BATCH, not after the loop: if batch k+1
-        # fails (e.g. validate_stream rejects it) after batch k merged,
-        # applied_seq must reflect the merged batches or a retry would
+        # fails (e.g. validate_stream rejects it) after batch k folded,
+        # applied_seq must reflect the folded batches or a retry would
         # re-apply them into the linear state
         if batch_size is None:
             self._apply_batch(lo, seq)
@@ -132,11 +134,15 @@ class GraphStreamDriver:
         batch = self.stream.where((F.col("seq") >= lo) & (F.col("seq") < hi))
         if self.validate_stream:
             self._validate_batch(batch)
-        delta = self.alg.build_state(batch)
-        if self.state is None:
-            new_state = delta
-        else:
-            new_state = self.alg.merge_states(self.state, delta)
+        # the rows _eager_maintain would collect, counted by the job that
+        # materializes the new state below (no extra job)
+        counted = Observation()
+        new_state = self.alg.build_state(
+            batch.observe(
+                counted, F.count(F.when(F.col("src") != F.col("dst"), 1)).alias("rows")
+            ),
+            base=self.state,
+        )
         # the ingest shuffles are few/large/fixed-width: AQE off for the
         # materializing action (see session.aqe_off)
         with aqe_off(self.spark):
@@ -164,16 +170,18 @@ class GraphStreamDriver:
             if old_state is not None:
                 self._drop_state(old_state)
         wall = time.time() - t0
+        rows = counted.get["rows"]
         self.metrics.append(
             {
                 "seq_lo": lo,
                 "seq_hi": hi,
+                "rows": rows,
                 "wall_s": round(wall, 3),
                 "updates_per_sec": round((hi - lo) / max(wall, 1e-9), 1),
             }
         )
         if self.eager:
-            self._eager_maintain(batch)
+            self._eager_maintain(batch, rows)
 
     def _validate_batch(self, batch: DataFrame) -> None:
         """Cross-batch stream-contract check (opt-in, see __init__).
@@ -183,7 +191,7 @@ class GraphStreamDriver:
         the live-edge parity table; a live edge with batch net=+1 is a
         cross-batch double insert, a dead edge with net=-1 a dead delete —
         both raise inside the join job (F.raise_error), so a malformed
-        producer fails the batch BEFORE its delta reaches the sketch state.
+        producer fails the batch BEFORE its updates reach the sketch state.
         The surviving rows are exactly the new live-edge set, checkpointed
         as next batch's table."""
         from graphzeppelin_spark.session import free_local_checkpoint
@@ -306,11 +314,17 @@ class GraphStreamDriver:
             .localCheckpoint(eager=True)  # raises here on a malformed prefix
         )
 
-    def _eager_maintain(self, batch: DataFrame) -> None:
+    def _eager_maintain(self, batch: DataFrame, num_rows: int) -> None:
         """Reference pre_insert analog on a whole micro-batch: insert edges
         union-found eagerly; a delete of a current forest edge invalidates the
-        cached labeling. Skipped (cache invalidated) for oversized batches."""
+        cached labeling. A batch of more than eager_batch_limit non-loop
+        updates (num_rows, counted during the ingest job) invalidates the
+        cache without collecting anything. The collect has no limit: a
+        limit funnels the batch through one CollectLimit partition."""
         if not self._dsu_valid:
+            return
+        if num_rows > self.eager_batch_limit:
+            self._dsu_valid = False
             return
         rows = (
             batch.select(
@@ -320,12 +334,8 @@ class GraphStreamDriver:
                 F.greatest("src", "dst").alias("hi"),
             )
             .where(F.col("lo") != F.col("hi"))
-            .limit(self.eager_batch_limit + 1)
             .toPandas()
         )
-        if len(rows) > self.eager_batch_limit:
-            self._dsu_valid = False
-            return
         types = rows["type"].to_numpy()
         lo = rows["lo"].to_numpy(np.int64)
         hi = rows["hi"].to_numpy(np.int64)
@@ -458,7 +468,7 @@ class GraphStreamDriver:
         further process_stream_until() batches, which build NEW state DFs and
         never mutate pinned ones. Spark schedules jobs submitted from
         different driver threads concurrently, so a long Boruvka and the next
-        batch's build/merge genuinely overlap. Close the snapshot (or use it
+        batch's fold genuinely overlap. Close the snapshot (or use it
         as a context manager) to release its pin.
 
         State is captured ONCE under the pin lock and that same reference is

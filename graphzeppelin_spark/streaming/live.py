@@ -116,18 +116,16 @@ class LiveGraphStream:
         # round-7 kron_17 live bench showed this path was missing (per-wave
         # fold cost grew 21 -> 126 -> 310s across 4 equal waves, and a
         # restarted instance whose state came from the store's parquet ran
-        # the SAME next wave in 215s): (1) the ingest merge's shuffles are
+        # the SAME next wave in 215s): (1) the fold's shuffles are
         # few/large/fixed-width — AQE off for the materializing action;
         # (2) after a store commit, adopt the state read back FROM the
         # store, so the working state's lineage is a clean parquet scan
-        # instead of an ever-deepening merge-over-localCheckpoint chain
-        # whose in-JVM blocks compound memory pressure wave over wave.
+        # instead of an ever-deepening fold-over-localCheckpoint chain
+        # whose in-JVM blocks compound memory pressure wave over wave. The
+        # wave folds straight into the state (build_state's base): no
+        # delta state is built, shuffled or merged.
         with aqe_off(self.spark):
-            delta = self.alg.build_state(batch_df)
-            new_state = (
-                delta if self.state is None
-                else self.alg.merge_states(self.state, delta)
-            )
+            new_state = self.alg.build_state(batch_df, base=self.state)
             if self.store is not None:
                 snap = self.store.commit(
                     new_state,
@@ -399,10 +397,9 @@ class LivePagesStream:
             "src",
             "dst",
         )
-        delta = self.alg.build_state(stream)
-        new_state = (
-            delta if self.state is None else self.alg.merge_states(self.state, delta)
-        ).localCheckpoint(eager=True)
+        new_state = self.alg.build_state(stream, base=self.state).localCheckpoint(
+            eager=True
+        )
         if self.state is not None:
             self.state.unpersist()
             superseded.append(self.state)
@@ -411,7 +408,7 @@ class LivePagesStream:
         self.batches_seen += 1
         if self._state_ckpt is not None:
             self._commit_snapshot(batch_id)
-        superseded.append(new_edges)  # consumed by the delta build above
+        superseded.append(new_edges)  # consumed by the fold above
         self._free(superseded)
 
     @staticmethod

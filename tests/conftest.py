@@ -26,7 +26,9 @@ EDGE_SCHEMA = T.StructType(
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="graphzeppelin_tests", cores=8, shuffle_partitions=8)
+    # cores from the host (SPARK_GRAFT_CPUS, else local[*]); 8 shuffle
+    # partitions keep the plan tests' shapes on any host
+    s = get_spark(app_name="graphzeppelin_tests", shuffle_partitions=8)
     yield s
 
 

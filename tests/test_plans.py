@@ -195,6 +195,22 @@ def test_build_state_has_single_exchange(spark, parquet_stream):
     assert "HashAggregate" in plan  # the net agg is still there, post-shuffle
 
 
+def test_fold_has_one_python_stage(spark, parquet_stream):
+    """A later batch folds into the state in ONE python stage: the batch's
+    net rows (gutter shuffle + partition-local net agg) are unioned with
+    the state rows and repartitioned by vertex once. No delta state is
+    encoded, shuffled or decoded by a second stage."""
+    import re
+
+    from graphzeppelin_spark.operators.sketch_cc import SketchCC
+
+    alg = SketchCC(spark, num_vertices=256, seed=3)
+    state = alg.build_state(parquet_stream).localCheckpoint(eager=True)
+    plan = _plan(alg.build_state(parquet_stream, base=state))
+    assert len(re.findall(r"^\(\d+\) MapInPandas", plan, flags=re.M)) == 1, plan
+    assert len(re.findall(r"^\(\d+\) Exchange", plan, flags=re.M)) == 2, plan
+
+
 def test_simhash_is_pure_catalyst(spark):
     """SimHash signatures must contain no Python evaluation nodes at all."""
     import pandas as pd

@@ -9,6 +9,7 @@ import pytest
 from graphzeppelin_spark import oracle
 from graphzeppelin_spark.operators.sketch_cc import SketchCC
 from graphzeppelin_spark.sketch.kernel import (
+    add_group_rows,
     decode_group_rows,
     encode_group_rows,
 )
@@ -40,6 +41,13 @@ def test_group_codec_roundtrip():
         exp[:, : k * gsz] = m[:, lo * gsz : (lo + k) * gsz]
         exp[:, -1] = m[:, -1]
         assert np.array_equal(got, exp)
+        # full-width add into named slots: a slot named twice gets the sum
+        rows = rng.integers(0, max(1, n // 2), size=n)
+        acc = np.zeros((n, nb, 2), dtype=np.uint64)
+        add_group_rows(acc, rows, dets, grps, gsz)
+        exp = np.zeros((n, nb, 2), dtype=np.uint64)
+        np.add.at(exp, rows, m)
+        assert np.array_equal(acc, exp)
 
 
 def test_round_sampler_ships_sliced_groups(spark):

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from graphzeppelin_spark import oracle
@@ -222,8 +223,77 @@ def test_merged_delta_states_sum_to_zero(spark, variant):
     alg = SketchCC(spark, num_vertices=n, seed=7, variant=variant)
     d1 = alg.build_state(stream_df(spark, first))
     d2 = alg.build_state(stream_df(spark, second))
-    for st in (d1, d2, alg.merge_states(d1, d2)):
+    folded = alg.build_state(stream_df(spark, second), base=d1)
+    for st in (d1, d2, alg.merge_states(d1, d2), folded):
         assert not _state_sum(alg, st).any()
+
+
+FOLD_PATHS = pytest.mark.parametrize("two_column", [False, True])
+
+
+def _fold_streams(n: int):
+    """A base stream of inserts on [0, n - 16) and a batch that deletes a
+    third of them, inserts edges on vertices absent from the base, and
+    deletes vertex 0's only edge, so its folded sketch is all-zero."""
+    rng = np.random.default_rng(11)
+    a = rng.integers(1, n - 16, size=(200, 2))
+    a = np.unique(np.sort(a[a[:, 0] != a[:, 1]], axis=1), axis=0)
+    a = np.concatenate([[[0, 1]], a])
+    fresh = np.stack([np.arange(n - 16, n - 1), np.arange(n - 15, n)], axis=1)
+    dels = np.concatenate([[[0, 1]], a[1::3]])
+    batch = np.concatenate([dels, fresh])
+    types = np.concatenate([np.ones(len(dels)), np.zeros(len(fresh))])
+    return (
+        _stream_pdf(np.zeros(len(a)), a[:, 0], a[:, 1]),
+        _stream_pdf(types, batch[:, 0], batch[:, 1]),
+    )
+
+
+@VARIANTS
+@FOLD_PATHS
+def test_fold_matches_merge_of_delta_build(spark, monkeypatch, variant, two_column):
+    """build_state(batch, base=state) is byte-identical to merging a delta
+    build of the batch into the state, on both ingest encodings, and its
+    labels are exact."""
+    from graphzeppelin_spark.operators import sketch_cc as scc
+    from tests.test_round8_fixes import _state_checksum
+
+    if two_column:
+        monkeypatch.setattr(scc, "FUSED_KEY_MAX_N", 0)
+    n = 96
+    first, second = _fold_streams(n)
+    alg = SketchCC(spark, num_vertices=n, seed=7, variant=variant)
+    base = alg.build_state(stream_df(spark, first)).localCheckpoint(eager=True)
+    batch = stream_df(spark, second)
+    folded = alg.build_state(batch, base=base).localCheckpoint(eager=True)
+    merged = alg.merge_states(base, alg.build_state(batch))
+    assert _state_checksum(folded) == _state_checksum(merged)
+    zero = folded.where("vertex = 0").collect()
+    assert len(zero) == 1 and zero[0]["det"] == bytes(16)
+    assert not any(zero[0]["grp"])
+    assert folded.where(f"vertex = {n - 1}").count() == 1  # absent from the base
+    labels, _ = alg.boruvka(folded)
+    both = pd.concat([first, second], ignore_index=True)
+    both["seq"] = np.arange(len(both))
+    edges_np = oracle.live_edges(both, n)
+    np.testing.assert_array_equal(labels, oracle.connected_components(edges_np, n))
+
+
+@FOLD_PATHS
+def test_fold_raises_on_double_insert(spark, monkeypatch, two_column):
+    """The stream-contract guard still fires on a batch folded into a
+    state: two inserts of one edge inside the batch."""
+    from graphzeppelin_spark.operators import sketch_cc as scc
+
+    if two_column:
+        monkeypatch.setattr(scc, "FUSED_KEY_MAX_N", 0)
+    alg = SketchCC(spark, num_vertices=16, seed=5)
+    base = alg.build_state(
+        stream_df(spark, _stream_pdf(np.zeros(1), np.array([3]), np.array([4])))
+    )
+    bad = _stream_pdf(np.zeros(2), np.array([1, 2]), np.array([2, 1]))
+    with pytest.raises(Exception, match="malformed stream"):
+        alg.build_state(stream_df(spark, bad), base=base).count()
 
 
 def _er_block(rng, lo: int, size: int, p: float) -> np.ndarray:

@@ -71,23 +71,6 @@ def test_merge_cancels_deleted_edges():
     assert a.exhaustive_sample(0) <= {5, 21}
 
 
-def test_merged_by_group_xor():
-    g = geom()
-    sm = SketchMatrix(g, 4)
-    sm.update_many(
-        np.array([0, 1, 2, 3]),
-        np.array([10, 10, 30, 40], dtype=np.uint64),
-        signs=np.array([1, -1, 1, 1]),
-    )
-    groups = np.array([7, 7, 8, 8])
-    uniq, combined = sm.merged_by_group(groups)
-    assert list(uniq) == [7, 8]
-    m = SketchMatrix(g, 2, combined)
-    s, e = m.sample_many(0)
-    assert s[0] == ZERO  # +10 and -10 cancel on merge
-    assert s[1] == GOOD and e[1] in (30, 40)
-
-
 def test_sample_idx_groups_independent():
     g = geom()
     sm = SketchMatrix(g, 1)

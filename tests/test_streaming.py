@@ -78,6 +78,33 @@ def test_eager_cache_insert_only(spark):
     np.testing.assert_array_equal(drv.connected_components(), expected)
 
 
+def test_eager_batch_over_limit_invalidates_without_collect(spark):
+    """A batch of more non-loop updates than eager_batch_limit invalidates
+    the cache on the row count the ingest job observes: it starts no
+    collect job, so it runs as many jobs as an eager=False driver."""
+    n = 256
+    s = multiples_graph_stream(n)
+    sc = spark.sparkContext
+    jobs, drivers = {}, {}
+    try:
+        for eager in (True, False):
+            group = f"eager-over-limit-{eager}-{id(s)}"
+            sc.setJobGroup(group, "eager over-limit test")
+            drv = GraphStreamDriver(
+                spark, stream_df(spark, s), n, seed=5, eager=eager, eager_batch_limit=10
+            )
+            drv.process_stream_until(len(s))
+            jobs[eager] = len(sc.statusTracker().getJobIdsForGroup(group))
+            drivers[eager] = drv
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not drivers[True]._dsu_valid
+    assert drivers[True].metrics[-1]["rows"] == len(s)  # no self-loops
+    assert jobs[True] == jobs[False] > 0
+    expected = oracle.connected_components(oracle.live_edges(s, n), n)
+    np.testing.assert_array_equal(drivers[True].connected_components(), expected)
+
+
 def test_eager_cache_invalidated_by_forest_delete(spark):
     """Reference cc_alg_test.cpp:223-263: deleting a spanning-forest edge must
     invalidate the cache; the next query recomputes correctly via sketches."""
