@@ -4,7 +4,10 @@ The Spark rendering of the reference's CC pipeline (SURVEY.md §3.1):
 
   reference (C++, one box)                     this engine (Spark)
   ------------------------------------------   --------------------------------
-  guttering system shuffle by vertex           repartition(vertex) + mapInPandas
+  guttering system shuffle by vertex           numpy gutters: a mapInArrow stage
+                                               ships one row of update keys per
+                                               (Arrow batch, partition); one
+                                               exchange; keys netted in numpy
   delta sketches + locked merge                per-partition SketchMatrix build
                                                (partition == final owner, so no
                                                second merge); a later batch
@@ -56,19 +59,20 @@ vertex's dense slot, adds the batch's updates and encodes once
 (streaming/driver.py builds on this); merge_states sums two states in the
 same stage.
 
-Scale notes: the only full-width shuffle is the initial repartition(vertex)
-(the reference's gutter shuffle). Boruvka rounds ship pruned slices
-(~1/num_samples of the state) and partial-aggregate per partition before the
-groupBy(root) exchange, so a giant component never concentrates more rows on
-one reducer than there are map partitions. Hub skew at ingest is handled by
-the net-multiplicity pre-aggregation (groupBy(vertex, eid) partial agg) which
-collapses repeat updates JVM-side before any Python work.
+Scale notes: the only full-width shuffle is the ingest's gutter exchange
+(the reference's gutter shuffle), which moves a few hundred rows of packed
+keys. Boruvka rounds ship pruned slices (~1/num_samples of the state) and
+partial-aggregate per partition before the groupBy(root) exchange, so a
+giant component never concentrates more rows on one reducer than there are
+map partitions. At ingest a hub vertex's updates travel as bytes inside its
+partition's gutters, and repeat updates net per key in numpy.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -137,14 +141,15 @@ FINISH_BATCH_GROUPS = 3
 # set entering the driver finish ~100x at kron_17 (see _boruvka_impl)
 ROUND0_GROUPS = 2
 
-# build_state's fused single-column ingest key (see _packed_skeys): the
-# magnitude eid*2 + is_hi < 2*n^2 must stay inside a signed int64, so the
-# fused path engages only for num_vertices <= 2^30 (~10^9 vertices — every
-# workload in this repo). Larger universes take the two-column path, whose
-# eid = lo*n + hi itself fits int64 only while n*n - 1 does (n <=
-# MAX_VERTICES); SketchCC refuses anything larger.
-FUSED_KEY_MAX_N = 1 << 30
+# eid = lo*n + hi must fit the signed-long eid columns of the query side, so
+# n*n - 1 <= 2^63 - 1; the ingest key eid*2 + is_hi then fits a uint64
 MAX_VERTICES = 3_037_000_499  # largest n with n*n - 1 <= 2^63 - 1
+
+# the vertex -> build partition mix (_vertex_partition): xorshift64 steps as
+# (shift, left?). Shifts and xors only, so numpy and Catalyst agree bit for
+# bit and nothing can overflow under ANSI mode. On kron_15's 4.4M endpoint
+# rows the largest of 8 partitions holds 1.06x the mean (v % 8: 3.05x).
+_MIX = ((13, True), (7, False), (17, True), (29, False))
 
 BUCKET_BYTES = 16  # one dense (alpha, gamma) uint64 bucket
 
@@ -213,9 +218,10 @@ class SketchCC:
 
     @staticmethod
     def _canonical_updates(stream: DataFrame) -> DataFrame:
-        """(lo, hi, sign) canonical undirected updates — the single shared
-        definition of edge canonicalization and the insert/delete sign
-        convention for both ingest encodings (packed_updates, _packed_skeys).
+        """(lo, hi, sign) canonical undirected updates in Catalyst: the edge
+        canonicalization and insert/delete sign convention of the table API
+        (packed_updates) and the streaming driver's validator. The build's
+        gutter stage (_gutters) applies the same rules in numpy.
 
         Stream contract (validated, not assumed): updates of one edge must
         alternate insert/delete — exactly what the reference asserts on its
@@ -226,18 +232,18 @@ class SketchCC:
         toggle semantics compose with folding micro-batches into the state
         (an insert in batch k cancels a delete in batch k+1 bucket-for-bucket
         when batch k+1 folds in — the role XOR plays in the reference). The
-        |net| > 1 guard (_net_guard) catches malformed updates WITHIN one
-        stream slice; a malformation split across separately folded slices
-        (e.g. two inserts of one edge in different micro-batches, each
-        netting +1) is invisible to it and corrupts the folded state —
-        cross-batch well-formedness is the producer's contract, exactly as
-        the reference's stream readers assume an alternating stream per
-        edge. Each undirected update hits both endpoints (the reference's
-        double gutter insert, graph_sketch_driver.h:171-172) with the AGM
-        signed-incidence convention: +eid at the lo endpoint, -eid at the hi
-        endpoint — so summing a supernode's member sketches cancels internal
-        edges exactly. All of this collapses in the JVM partial agg before
-        any Python runs."""
+        |net| > 1 guard (_net_guard here, _net_gutters in the build) catches
+        malformed updates WITHIN one stream slice; a malformation split
+        across separately folded slices (e.g. two inserts of one edge in
+        different micro-batches, each netting +1) is invisible to it and
+        corrupts the folded state — cross-batch well-formedness is the
+        producer's contract, exactly as the reference's stream readers
+        assume an alternating stream per edge. Each undirected update hits
+        both endpoints (the reference's double gutter insert,
+        graph_sketch_driver.h:171-172) with the AGM signed-incidence
+        convention: +eid at the lo endpoint, -eid at the hi endpoint — so
+        summing a supernode's member sketches cancels internal edges
+        exactly."""
         return stream.select(
             F.least("src", "dst").alias("lo"),
             F.greatest("src", "dst").alias("hi"),
@@ -247,8 +253,8 @@ class SketchCC:
     @staticmethod
     def _net_guard():
         """Keep net != 0 rows; raise on |net| > 1 (non-alternating stream) —
-        the single shared definition of the stream-contract guard. Expects
-        columns `net` and `eid` in scope."""
+        the Catalyst form of the stream-contract guard. Expects columns
+        `net` and `eid` in scope."""
         return F.when(
             F.abs("net") > 1,
             F.raise_error(
@@ -260,42 +266,19 @@ class SketchCC:
         ).otherwise(F.col("net") != 0)
 
     def packed_updates(self, stream: DataFrame) -> DataFrame:
-        """(vertex, seid) net updates, hash-partitioned by vertex — the build
-        shuffle's 16-byte row format (sign folded into the edge id; eid >= 1
-        always).
+        """(vertex, seid) net updates as a table, hash-partitioned by vertex,
+        the sign folded into the edge id (eid >= 1 always). The build does
+        not run this plan (it nets its gutters in numpy, _sketch_stage);
+        layer probes and scripts read net rows through it.
 
-        The ingest path's ONE full-width exchange happens here, BEFORE the
-        net-multiplicity aggregation: hashpartitioning(vertex) satisfies the
-        (vertex, eid) clustered distribution, so the groupBy that collapses
-        duplicate updates runs partition-local with no second exchange. The
-        round-3 plan aggregated first (exchange on (vertex, eid)) and then
-        repartitioned by vertex — two exchanges; collapsing them measured
-        11.9s → 9.5s best (and an ~8x tighter run spread) on the kron_17
-        31.6M-update ingest at local[32]. Skew note: a hub vertex now
-        concentrates its GROSS update rows (not just net) on one reducer,
-        but the reference's alternating-stream contract bounds gross at a
-        small multiple of net, and the per-partition aggregation is
-        vectorized JVM code either way."""
-        part = self._partitioned_updates(stream)
-        net = part.groupBy("vertex", F.abs("seid").alias("eid")).agg(
-            F.sum(F.when(F.col("seid") > 0, F.lit(1)).otherwise(F.lit(-1))).alias("net")
-        )
-        guarded = net.where(self._net_guard())
-        return guarded.select("vertex", (F.col("net") * F.col("eid")).alias("seid"))
-
-    def _partitioned_updates(self, stream: DataFrame) -> DataFrame:
-        """(vertex, seid) GROSS signed incidence rows, hash-partitioned by
-        vertex — the build shuffle WITHOUT the net aggregation (build_state
-        nets in numpy inside the build stage; packed_updates layers the JVM
-        aggregation on top for consumers that want net rows as a table)."""
+        hashpartitioning(vertex) satisfies the (vertex, eid) clustered
+        distribution, so the groupBy that nets repeat updates runs
+        partition-local after the one exchange."""
         n = self.num_vertices
         canon = self._canonical_updates(stream)
         seid = F.col("sign") * (F.col("lo") * F.lit(n) + F.col("hi"))
         # ONE generator scan (inline of a 2-struct array), not a unionAll of
-        # two selects: the union form scanned the stream parquet (and computed
-        # the canonicalization) twice per materialization — the same lesson as
-        # functions/edges.bidirect, applied to the ingest hot path (measured
-        # ~0.25s of the kron_17 exchange stage at local[32])
+        # two selects, which would scan the stream twice
         both = canon.select(
             F.inline(
                 F.array(
@@ -303,175 +286,150 @@ class SketchCC:
                     F.struct(F.col("hi").alias("vertex"), (-seid).alias("seid")),
                 )
             )
+        ).repartition(self.num_partitions, "vertex")
+        net = both.groupBy("vertex", F.abs("seid").alias("eid")).agg(
+            F.sum(F.when(F.col("seid") > 0, F.lit(1)).otherwise(F.lit(-1))).alias("net")
         )
-        return both.repartition(self.num_partitions, "vertex")
+        guarded = net.where(self._net_guard())
+        return guarded.select("vertex", (F.col("net") * F.col("eid")).alias("seid"))
 
-    def _packed_skeys(self, stream: DataFrame) -> DataFrame:
-        """Net updates for the build hot path as (vertex, o) int64 rows,
-        hash-partitioned by vertex; ``o`` alone carries the SAME information
-        as packed_updates' (vertex, seid). A first build selects ``o`` only
-        and recomputes the vertex from the edge id instead of shipping it; a
-        fold keeps the grouping's ``vertex`` to repartition its union with
-        the base state rows.
+    def _gutters(self, stream: DataFrame) -> DataFrame:
+        """The reference's gutters (GutteringSystem, graph_sketch_driver.h:
+        100-108) as a python map stage over a stream slice, in the sketch
+        stage's row layout. Per Arrow batch it canonicalizes the updates
+        (_canonical_updates' rules), keys both endpoint rows of each and
+        groups the keys by their vertex's build partition
+        (_vertex_partition), then emits ONE row per (batch, partition): the
+        partition's route key (_route_keys), the keys as a uint64 blob and
+        the signs as an int8 blob. The exchange moves batches x partitions
+        rows instead of one per endpoint update.
 
-        Encoding: a gross incidence row is ``skey = u * (eid*2 + is_hi)``
-        where u is the update sign, eid = lo*n + hi, and is_hi says which
-        endpoint this row is for (the vertex is then lo or hi of eid — 1
-        redundant bit instead of a redundant 8-byte column). After the
-        per-(endpoint, edge) net aggregation, ``o = seid_sign * (eid*2 +
-        is_hi)`` with seid_sign = net * (+1 at lo / -1 at hi), i.e. exactly
-        packed_updates' AGM-signed net rows in one column. Why (guide §2.3,
-        §4.1): the build exchange ships 16-byte UnsafeRows instead of
-        24-byte two-column rows (-33% shuffle bytes on the ingest's ONE
-        full-width exchange) and the Arrow boundary crosses 8 bytes/row
-        instead of 16 — kron_17 interleaved A/B over 8 pairs: fused best
-        6.59s / median ~7.2 vs two-col best 7.10 / median ~8.6, with a
-        byte-identical state (bit_xor checksum over (vertex, det, grp)
-        equal) and visibly smaller stall exposure (max 10.2s vs 20.0s under
-        co-tenant bursts). All decode arithmetic is exact integer ops
-        (shiftright / div / %): float division would silently lose
-        precision past 2^53. Gated on FUSED_KEY_MAX_N."""
-        n = self.num_vertices
-        canon = self._canonical_updates(stream)
-        eid2 = (F.col("lo") * F.lit(n) + F.col("hi")) * F.lit(2)
-        both = canon.select(
-            F.inline(
-                F.array(
-                    F.struct((F.col("sign") * eid2).alias("skey")),
-                    F.struct((F.col("sign") * (eid2 + F.lit(1))).alias("skey")),
+        A key is eid*2 + is_hi (eid = lo*n + hi; is_hi names the endpoint,
+        so the sketch stage recovers the vertex from the key); it fits a
+        uint64 for every n <= MAX_VERTICES. The sign is the AGM one: +u at
+        lo and -u at hi, u = +1 for an insert and -1 for a delete."""
+        n = np.uint64(self.num_vertices)
+        parts = self.num_partitions
+        route = pa.array(_route_keys(parts))
+
+        def _emit(batches):
+            for b in batches:
+                typ, src, dst = (c.to_numpy() for c in b.columns)
+                lo, hi = np.minimum(src, dst), np.maximum(src, dst)
+                keep = lo != hi
+                lo, hi = lo[keep], hi[keep]
+                u = np.where(typ[keep] == 0, 1, -1).astype(np.int8)
+                key = (lo.astype(np.uint64) * n + hi.astype(np.uint64)) << np.uint64(1)
+                pid = _vertex_partition(np.concatenate([lo, hi]), parts)
+                order = np.argsort(pid)
+                keys = np.concatenate([key, key | np.uint64(1)])[order]
+                signs = np.concatenate([u, -u])[order]
+                ends = np.zeros(parts + 1, np.int32)
+                np.cumsum(np.bincount(pid, minlength=parts), out=ends[1:])
+                yield pa.RecordBatch.from_arrays(
+                    [route, _binary(keys, ends * 8), _binary(signs, ends)],
+                    ["route", "keys", "signs"],
                 )
-            )
+
+        return stream.select(
+            F.col("type").cast("int"), F.col("src").cast("long"), F.col("dst").cast("long")
+        ).mapInArrow(_emit, "route int, keys binary, signs binary").select(
+            "route",
+            F.lit(-1).cast("long").alias("vertex"),
+            # EMPTY blobs, not nulls: Spark's Arrow writer took ~15x longer
+            # (16 s vs 1.2 s, kron_14 batch) to ship null det/grp values
+            # mixed with the state rows' blobs
+            F.lit(b"").alias("det"),
+            F.array().cast(T.ArrayType(T.BinaryType())).alias("grp"),
+            "keys",
+            "signs",
         )
-        # vertex recomputed from skey; the SAME expression object partitions
-        # and groups, so the groupBy reuses the one exchange (plan-gated)
-        vexpr = F.expr(
-            f"if((abs(skey) & 1) = 1,"
-            f" shiftright(abs(skey), 1) % {n},"
-            f" shiftright(abs(skey), 1) div {n})"
-        )
-        part = both.repartition(self.num_partitions, vexpr)
-        grouped = part.groupBy(
-            vexpr.alias("v"), F.abs(F.col("skey")).alias("akey")
-        ).agg(
-            F.sum(
-                F.when(F.col("skey") > 0, F.lit(1)).otherwise(F.lit(-1))
-            ).alias("net")
-        )
-        guarded = grouped.select(
-            "v", "akey", "net", F.shiftright(F.col("akey"), 1).alias("eid")
-        ).where(self._net_guard())
-        agm = F.when(
-            F.col("akey").bitwiseAND(F.lit(1)) == 1, -F.col("net")
-        ).otherwise(F.col("net"))
-        return guarded.select(
-            F.col("v").alias("vertex"), (agm * F.col("akey")).alias("o")
+
+    def _state_rows(self, state: DataFrame) -> DataFrame:
+        """A state's rows in the sketch stage's row layout, routed to their
+        vertex's build partition by the Catalyst form of _vertex_partition;
+        they carry no keys."""
+        pid = _vertex_partition(F.col("vertex"), self.num_partitions)
+        routes = _route_keys(self.num_partitions).tolist()
+        route = F.element_at(F.lit(routes), (pid + 1).cast("int"))
+        return state.select(
+            route.alias("route"), "vertex", "det", "grp",
+            F.lit(b"").alias("keys"), F.lit(b"").alias("signs"),
         )
 
     def build_state(self, stream: DataFrame, base: DataFrame | None = None) -> DataFrame:
         """Build the (vertex, det, grp) state table from a stream slice, or
         fold the slice into an existing state `base`.
 
-        The JVM net-multiplicity aggregation between the exchange and the
-        python stage stays DELIBERATELY (round-8 interleaved A/B): the Arrow
-        boundary charges per row, and netting cuts the rows crossing it 3x
-        at kron_17 (63M gross -> 21M net) — moving the netting into numpy
-        (sort + segmented reduce, body measured at 0.29s/partition) still
-        lost ~6s end-to-end to the extra 42M rows of Arrow serialization
-        (old best 7.2s / median 8.6 vs new 13.1/18.7).
+        The slice enters as gutters (_gutters): one row per (Arrow batch,
+        build partition) holding that partition's keys, so the one exchange
+        moves a few hundred rows, and the sketch stage nets them in numpy
+        (_net_gutters). This reverses round 8's rule that a JVM net
+        aggregation stay between the exchange and the python stage, which
+        was measured at local[32] on another VM with one Arrow row per net
+        update. On a 4-core host (local[4], perfbench kron_batch, kron_15,
+        interleaved pairs against that JVM-netting build) ingest went from
+        a median 292k to 437k updates/s on seed 831 (10 pairs, 10 won) and
+        from 484k to 726k on seed 833 (6 pairs, 6 won), with a
+        byte-identical state.
 
-        For num_vertices <= FUSED_KEY_MAX_N the exchange + Arrow rows are
-        the fused one-column encoding (_packed_skeys); the state produced is
-        byte-identical either way (checksum-pinned regression test).
-
-        With `base`, the slice's net rows keep their vertex, are unioned
-        with the base rows (tagged key 0: edge ids are >= 1, so no update
-        row has key 0) and repartitioned by vertex once, and ONE python
-        stage decodes the base rows into their vertices' dense slots, runs
-        the kernel over the updates and encodes once (_sketch_stage). The
-        result is byte-identical to merge_states(base, build_state(stream))
-        without encoding, shuffling and decoding a delta state: on a 4-core
-        host a later kron_14 micro-batch of ~259k updates went from 4.7-5.6 s
-        to 3.4-3.9 s, commit and eager DSU included."""
-        fused = self.num_vertices <= FUSED_KEY_MAX_N
-        # both inputs are already hash-partitioned by vertex
-        updates = self._packed_skeys(stream) if fused else self.packed_updates(stream)
-        key = "o" if fused else "seid"
-        if base is None:
-            return self._sketch_stage(updates.select("o") if fused else updates)
-        # update rows carry EMPTY blobs, not nulls: Spark's Arrow writer took
-        # ~15x longer (16 s vs 1.2 s, kron_14 batch) to ship null det/grp
-        # values mixed with the state rows' blobs
-        rows = base.select(
-            "vertex", "det", "grp", F.lit(0).cast("long").alias(key)
-        ).unionAll(
-            updates.select(
-                "vertex",
-                F.lit(b"").alias("det"),
-                F.array().cast(T.ArrayType(T.BinaryType())).alias("grp"),
-                key,
-            )
-        )
-        return self._sketch_stage(rows.repartition(self.num_partitions, "vertex"))
+        With `base`, the base rows are routed to their vertex's build
+        partition (_state_rows), unioned with the slice's gutters and
+        repartitioned once, and ONE python stage decodes the base rows into
+        their vertices' dense slots, runs the kernel over the net updates
+        and encodes once (_sketch_stage). The result is byte-identical to
+        merge_states(base, build_state(stream)) without encoding, shuffling
+        and decoding a delta state."""
+        gutters = self._gutters(stream)
+        rows = gutters if base is None else self._state_rows(base).unionAll(gutters)
+        return self._sketch_stage(rows)
 
     def merge_states(self, a: DataFrame, b: DataFrame) -> DataFrame:
         """Additive merge of two state tables (linear-sketch property): the
         fold's python stage over the two states' rows and no updates."""
-        both = a.select("vertex", "det", "grp").unionAll(b.select("vertex", "det", "grp"))
-        return self._sketch_stage(both.repartition(self.num_partitions, "vertex"))
+        return self._sketch_stage(self._state_rows(a).unionAll(self._state_rows(b)))
 
     def _sketch_stage(self, rows: DataFrame) -> DataFrame:
-        """The one python stage of build, fold and merge, over rows that
-        are hash-partitioned by vertex. Its columns say what each row is:
+        """The one python stage of build, fold and merge, over rows of the
+        layout (route, vertex, det, grp, keys, signs), repartitioned here by
+        route so that all rows of a vertex meet on one task:
 
-        - ``o`` (fused key, o = +-(eid*2 + is_hi)) or ``seid`` (signed
-          eid): an update row; a first build ships ``o`` without its
-          vertex, which the stage recomputes from eid and is_hi;
-        - ``det``/``grp``: a state row, key 0 when a key column exists.
-          State rows are decoded into their vertex's slot and summed, so
-          two rows of one vertex (merge_states) add up.
+        - a gutter (vertex -1, empty det/grp): keys and signs of updates,
+          netted per key over the partition's gutters (_net_gutters);
+        - a state row (empty keys/signs): decoded into its vertex's slot and
+          summed, so two rows of one vertex (merge_states) add up.
 
         Every vertex of a partition gets one dense SketchMatrix row, the
-        kernel adds the updates, and the matrix is encoded once."""
+        kernel adds the net updates, and the matrix is encoded once."""
         geom = self.geom
-        n = self.num_vertices
+        n = np.uint64(self.num_vertices)
         gsz = geom.cols_per_sample * geom.bkt_per_col
         n_groups = geom.num_samples
-        cols = set(rows.columns)
-        key_col = "o" if "o" in cols else "seid" if "seid" in cols else None
-        shift = np.uint64(1 if key_col == "o" else 0)
-        has_vertex, has_state = "vertex" in cols, "det" in cols
 
         def _apply(batches):
             for pdf in _concat(batches):
-                if key_col is None:
-                    key = np.zeros(len(pdf), dtype=np.int64)
-                else:
-                    key = pdf[key_col].to_numpy(np.int64)
-                akey = np.abs(key).astype(np.uint64)
-                eids = akey >> shift
-                if has_vertex:
-                    verts = pdf["vertex"].to_numpy(np.int64)
-                else:
-                    is_hi = (akey & np.uint64(1)).astype(bool)
-                    lo = (eids // np.uint64(n)).astype(np.int64)
-                    hi = (eids % np.uint64(n)).astype(np.int64)
-                    verts = np.where(is_hi, hi, lo)
-                uniq, inv = np.unique(verts, return_inverse=True)
+                verts = pdf["vertex"].to_numpy(np.int64)
+                old = verts >= 0
+                eids, signs, upd = _net_gutters(pdf["keys"], pdf["signs"], n)
+                uniq, inv = np.unique(np.concatenate([verts[old], upd]), return_inverse=True)
+                if not len(uniq):
+                    continue
                 sm = SketchMatrix(geom, len(uniq), reuse_slot="build")
-                if has_state:
-                    old = key == 0
+                k = int(old.sum())
+                if k:
                     add_group_rows(
-                        sm.buckets, inv[old], pdf["det"][old].tolist(),
+                        sm.buckets, inv[:k], pdf["det"][old].tolist(),
                         pdf["grp"][old].tolist(), gsz,
                     )
-                    new = ~old
-                    key, eids, inv = key[new], eids[new], inv[new]
-                signs = np.where(key >= 0, np.int64(1), np.int64(-1))
-                sm.update_many(inv, eids, signs=signs)
+                sm.update_many(inv[k:], eids, signs=signs)
                 dets, grps = encode_group_rows(sm.buckets, gsz, n_groups)
                 yield pd.DataFrame({"vertex": uniq, "det": dets, "grp": grps})
 
-        return rows.mapInPandas(_apply, schema=STATE_SCHEMA)
+        return (
+            rows.repartition(self.num_partitions, "route")
+            .select("vertex", "det", "grp", "keys", "signs")
+            .mapInPandas(_apply, schema=STATE_SCHEMA)
+        )
 
     # ------------------------------------------------------------------ query
 
@@ -1184,6 +1142,81 @@ def _concat(batches):
     if not pdfs:
         return
     yield pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
+
+
+def _vertex_partition(v, parts: int):
+    """The build partition of each vertex: xorshift64 steps (_MIX), then
+    pmod. `v` is an int64 numpy array or a Catalyst long column; both forms
+    wrap left shifts to 64 bits and shift right arithmetically, so they
+    agree bit for bit."""
+    h = v
+    for s, left in _MIX:
+        if isinstance(h, np.ndarray):
+            h = h ^ ((h << s) if left else (h >> s))
+        else:
+            h = h.bitwiseXOR(F.shiftleft(h, s) if left else F.shiftright(h, s))
+    return h % parts if isinstance(h, np.ndarray) else F.pmod(h, F.lit(parts))
+
+
+def _murmur3_int(k: int, seed: int = 42) -> int:
+    """Spark's hash of an int column (Murmur3_x86_32.hashInt, seed 42), the
+    hash that hashpartitioning takes pmod of."""
+    m = 0xFFFFFFFF
+
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (32 - r))) & m
+
+    h = rotl(seed ^ (rotl(k * 0xCC9E2D51 & m, 15) * 0x1B873593 & m), 13)
+    h = (h * 5 + 0xE6546B64) & m ^ 4
+    h = (h ^ h >> 16) * 0x85EBCA6B & m
+    h = (h ^ h >> 13) * 0xC2B2AE35 & m
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+def _route_keys(parts: int) -> np.ndarray:
+    """route[p]: the smallest int that Spark's hashpartitioning into `parts`
+    partitions sends to partition p. Rows repartitioned by
+    route[_vertex_partition(v)] meet on one task per vertex whatever the
+    table holds; this one also gives each task exactly one vertex
+    partition."""
+    route = np.full(parts, -1, np.int32)
+    r = 0
+    while (route < 0).any():
+        p = _murmur3_int(r) % parts
+        if route[p] < 0:
+            route[p] = r
+        r += 1
+    return route
+
+
+def _binary(data: np.ndarray, offsets: np.ndarray) -> pa.Array:
+    """An Arrow binary array over data's bytes without a copy: row i is
+    bytes [offsets[i], offsets[i+1]) (int32 offsets)."""
+    return pa.Array.from_buffers(
+        pa.binary(), len(offsets) - 1, [None, pa.py_buffer(offsets), pa.py_buffer(data)]
+    )
+
+
+def _net_gutters(key_blobs, sign_blobs, n: np.uint64):
+    """(eid, signed net, vertex) of the nonzero net updates in one
+    partition's gutters (_gutters): the signs summed per key. Under the
+    stream contract a key's net over a slice is -1, 0 or +1; anything else
+    raises, naming the edge."""
+    keys = np.frombuffer(b"".join(key_blobs), np.uint64)
+    uk, inv = np.unique(keys, return_inverse=True)
+    signs = np.frombuffer(b"".join(sign_blobs), np.int8)
+    net = np.bincount(inv, signs, len(uk)).astype(np.int64)
+    bad = np.abs(net) > 1
+    if bad.any():
+        raise ValueError(
+            f"malformed stream: non-alternating updates for eid {uk[bad][0] >> np.uint64(1)}"
+        )
+    keep = net != 0
+    uk, net = uk[keep], net[keep]
+    eids = uk >> np.uint64(1)
+    verts = np.where((uk & np.uint64(1)).astype(bool), eids % n, eids // n)
+    return eids, net, verts.astype(np.int64)
 
 
 def _boruvka_done(active: int, merged: int, failed: int) -> bool:

@@ -324,12 +324,6 @@ class SketchMatrix:
                 np.add.at(alpha, det, xv)
                 np.add.at(gamma, det, checks)
 
-    # -- algebra -----------------------------------------------------------
-
-    def merge_rows_from(self, other: "SketchMatrix", dst_rows: np.ndarray, src_rows: np.ndarray) -> None:
-        """buckets[dst] += other.buckets[src] (bucket-wise additive merge)."""
-        np.add.at(self.buckets, np.asarray(dst_rows), other.buckets[np.asarray(src_rows)])
-
     # -- sampling ----------------------------------------------------------
 
     def _good_resolve(

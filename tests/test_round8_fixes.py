@@ -193,52 +193,56 @@ def _state_checksum(state):
     )
 
 
-def test_fused_skey_build_state_byte_identical(spark, monkeypatch):
-    """build_state's fused one-column ingest encoding (skey = u*(eid*2+is_hi))
-    must produce a byte-identical state to the two-column (vertex, seid)
-    path — including delete updates and repeat insert/delete toggles."""
+def _toggle_stream(n: int, ops: int, seed: int):
+    """Random insert/delete toggles on [0, n), alternating per edge as the
+    stream contract requires (an op on an edge flips its live state)."""
     import pandas as pd
 
-    from graphzeppelin_spark.operators import sketch_cc as scc
-
-    n = 300
-    rng = np.random.default_rng(7)
+    rng = np.random.default_rng(seed)
     rows = []
-    seq = 0
     live: set[tuple[int, int]] = set()
-    # random insert/delete toggles, alternating per edge as the stream
-    # contract requires (an op on an edge flips its live state)
-    for _ in range(900):
-        a, b = rng.integers(0, n, size=2)
+    for _ in range(ops):
+        a, b = (int(x) for x in rng.integers(0, n, size=2))
         if a == b:
             continue
         key = (min(a, b), max(a, b))
-        if key in live:
-            rows.append((seq, 1, int(a), int(b))); seq += 1
-            live.discard(key)
-        else:
-            rows.append((seq, 0, int(a), int(b))); seq += 1
-            live.add(key)
-    pdf = pd.DataFrame(rows, columns=["seq", "type", "src", "dst"])
-    stream = stream_df(spark, pdf)
+        rows.append((len(rows), int(key in live), a, b))
+        live.symmetric_difference_update({key})
+    return pd.DataFrame(rows, columns=["seq", "type", "src", "dst"])
 
+
+# _state_checksum of the build in the test below, as the two-column
+# (vertex, signed eid) ingest path that larger universes once took made it
+FAR_BUILD_CHECKSUM = (-389718083365154086, 299)
+
+
+def test_fused_skey_build_state_byte_identical(spark):
+    """The fused ingest key eid*2 + is_hi, its sign carried beside it, on the
+    largest universe SketchCC accepts with vertex ids at its top, so keys
+    pass 2^63: a build of random insert/delete toggles gives the bytes the
+    two-column ingest gave (pinned checksum), folding the second half of
+    the stream into a build of the first equals merge_states of the two
+    halves' builds, and the labels are exact."""
+    from graphzeppelin_spark.operators.sketch_cc import MAX_VERTICES
+    from tests.test_sketch_cc import _assert_exact_labels, _shifted
+
+    n, off = MAX_VERTICES, MAX_VERTICES - 300
+    pdf = _shifted(_toggle_stream(300, 900, 7), off)
     alg = SketchCC(spark, num_vertices=n, seed=5)
-    assert n <= scc.FUSED_KEY_MAX_N  # fused path engaged
-    cs_fused = _state_checksum(alg.build_state(stream))
-    monkeypatch.setattr(scc, "FUSED_KEY_MAX_N", 0)  # force two-column path
-    cs_twocol = _state_checksum(alg.build_state(stream))
-    assert cs_fused == cs_twocol
-    # and the query result over the fused state matches the exact oracle
-    monkeypatch.undo()
-    assert n <= scc.FUSED_KEY_MAX_N
-    labels, _ = alg.boruvka(alg.build_state(stream))
-    edges_np = oracle.live_edges(pdf, n)
-    np.testing.assert_array_equal(labels, oracle.connected_components(edges_np, n))
+    state = alg.build_state(stream_df(spark, pdf)).localCheckpoint(eager=True)
+    assert _state_checksum(state) == FAR_BUILD_CHECKSUM
+    half = len(pdf) // 2
+    first = alg.build_state(stream_df(spark, pdf[:half])).localCheckpoint(eager=True)
+    second = stream_df(spark, pdf[half:])
+    assert _state_checksum(alg.build_state(second, base=first)) == _state_checksum(
+        alg.merge_states(first, alg.build_state(second))
+    )
+    _assert_exact_labels(alg, state, pdf, 300, off)
 
 
 def test_fused_skey_build_state_raises_on_malformed(spark):
     """The |net|>1 stream-contract guard must still fire through the fused
-    encoding (two inserts of one edge in one slice)."""
+    ingest key (two inserts of one edge in one slice)."""
     import pandas as pd
 
     bad = pd.DataFrame(

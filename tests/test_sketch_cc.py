@@ -8,7 +8,7 @@ import pandas as pd
 import pytest
 
 from graphzeppelin_spark import oracle
-from graphzeppelin_spark.operators.sketch_cc import SketchCC
+from graphzeppelin_spark.operators.sketch_cc import MAX_VERTICES, SketchCC
 from graphzeppelin_spark.sketch.kernel import decode_group_rows
 from graphzeppelin_spark.sources.generators import (
     _stream_pdf,
@@ -228,7 +228,32 @@ def test_merged_delta_states_sum_to_zero(spark, variant):
         assert not _state_sum(alg, st).any()
 
 
-FOLD_PATHS = pytest.mark.parametrize("two_column", [False, True])
+# far=True runs on the largest universe SketchCC accepts, with vertex ids at
+# its top, so the ingest keys eid*2 + is_hi pass 2^63 (the uint64 key range)
+FOLD_PATHS = pytest.mark.parametrize("far", [False, True])
+
+
+def _shifted(pdf: pd.DataFrame, off: int) -> pd.DataFrame:
+    out = pdf.copy()
+    out["src"] += off
+    out["dst"] += off
+    return out
+
+
+def _assert_exact_labels(alg, state, stream_pdf: pd.DataFrame, n_local: int, off: int):
+    """Labels of `state` equal the oracle's on the stream, whose ids are
+    [off, off + n_local). At off 0 through boruvka(); above, through the
+    DataFrame-resident path, which keeps no array of num_vertices."""
+    local = _shifted(stream_pdf, -off)
+    local["seq"] = np.arange(len(local))
+    expected = oracle.connected_components(oracle.live_edges(local, n_local), n_local)
+    if off == 0:
+        np.testing.assert_array_equal(alg.boruvka(state)[0], expected)
+        return
+    out = alg.connected_components_distributed(state).toPandas()
+    got = np.arange(n_local) + off  # vertices absent from state are singletons
+    got[out["vertex"].to_numpy() - off] = out["component"].to_numpy()
+    np.testing.assert_array_equal(got - off, expected)
 
 
 def _fold_streams(n: int):
@@ -249,51 +274,122 @@ def _fold_streams(n: int):
     )
 
 
+# _state_checksum of build_state(first) and of the fold of second into it
+# (_fold_streams(96), seed 7), as the ingest that netted updates in the JVM
+# before the python stage produced them: a rewrite of the ingest must give
+# the same bytes, not only agree with itself
+GOLDEN_CHECKSUMS = {
+    "cameo": ((-376776583116307544, 80), (5638389609316584627, 96)),
+    "cubesketch": ((2940622044037624068, 80), (-603352367956210327, 96)),
+}
+
+
 @VARIANTS
-@FOLD_PATHS
-def test_fold_matches_merge_of_delta_build(spark, monkeypatch, variant, two_column):
-    """build_state(batch, base=state) is byte-identical to merging a delta
-    build of the batch into the state, on both ingest encodings, and its
-    labels are exact."""
-    from graphzeppelin_spark.operators import sketch_cc as scc
+def test_state_checksum_golden(spark, variant):
     from tests.test_round8_fixes import _state_checksum
 
-    if two_column:
-        monkeypatch.setattr(scc, "FUSED_KEY_MAX_N", 0)
-    n = 96
-    first, second = _fold_streams(n)
+    first, second = _fold_streams(96)
+    alg = SketchCC(spark, num_vertices=96, seed=7, variant=variant)
+    base = alg.build_state(stream_df(spark, first)).localCheckpoint(eager=True)
+    folded = alg.build_state(stream_df(spark, second), base=base)
+    assert (_state_checksum(base), _state_checksum(folded)) == GOLDEN_CHECKSUMS[variant]
+
+
+@VARIANTS
+@FOLD_PATHS
+def test_fold_matches_merge_of_delta_build(spark, variant, far):
+    """build_state(batch, base=state) is byte-identical to merging a delta
+    build of the batch into the state, on a small universe and near
+    MAX_VERTICES, and its labels are exact."""
+    from tests.test_round8_fixes import _state_checksum
+
+    n = MAX_VERTICES if far else 96
+    off = n - 96
+    first, second = (_shifted(p, off) for p in _fold_streams(96))
     alg = SketchCC(spark, num_vertices=n, seed=7, variant=variant)
     base = alg.build_state(stream_df(spark, first)).localCheckpoint(eager=True)
     batch = stream_df(spark, second)
     folded = alg.build_state(batch, base=base).localCheckpoint(eager=True)
     merged = alg.merge_states(base, alg.build_state(batch))
     assert _state_checksum(folded) == _state_checksum(merged)
-    zero = folded.where("vertex = 0").collect()
+    zero = folded.where(f"vertex = {off}").collect()
     assert len(zero) == 1 and zero[0]["det"] == bytes(16)
     assert not any(zero[0]["grp"])
     assert folded.where(f"vertex = {n - 1}").count() == 1  # absent from the base
-    labels, _ = alg.boruvka(folded)
-    both = pd.concat([first, second], ignore_index=True)
-    both["seq"] = np.arange(len(both))
-    edges_np = oracle.live_edges(both, n)
-    np.testing.assert_array_equal(labels, oracle.connected_components(edges_np, n))
+    _assert_exact_labels(alg, folded, pd.concat([first, second], ignore_index=True), 96, off)
 
 
 @FOLD_PATHS
-def test_fold_raises_on_double_insert(spark, monkeypatch, two_column):
+def test_fold_raises_on_double_insert(spark, far):
     """The stream-contract guard still fires on a batch folded into a
     state: two inserts of one edge inside the batch."""
-    from graphzeppelin_spark.operators import sketch_cc as scc
-
-    if two_column:
-        monkeypatch.setattr(scc, "FUSED_KEY_MAX_N", 0)
-    alg = SketchCC(spark, num_vertices=16, seed=5)
+    n = MAX_VERTICES if far else 16
+    off = n - 16
+    alg = SketchCC(spark, num_vertices=n, seed=5)
     base = alg.build_state(
-        stream_df(spark, _stream_pdf(np.zeros(1), np.array([3]), np.array([4])))
+        stream_df(spark, _shifted(_stream_pdf(np.zeros(1), np.array([3]), np.array([4])), off))
     )
-    bad = _stream_pdf(np.zeros(2), np.array([1, 2]), np.array([2, 1]))
+    bad = _shifted(_stream_pdf(np.zeros(2), np.array([1, 2]), np.array([2, 1])), off)
     with pytest.raises(Exception, match="malformed stream"):
         alg.build_state(stream_df(spark, bad), base=base).count()
+
+
+def test_guard_nets_across_arrow_batches(spark):
+    """Updates of one edge in different Arrow batches of one map task land
+    in different gutters; the sketch stage nets them all the same: an
+    insert and its delete cancel out of the state, and two inserts raise."""
+    from tests.test_round8_fixes import _state_checksum
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    src, dst = [1, 2, 4, 5, 6, 8], [2, 3, 5, 6, 7, 9]
+    alg = SketchCC(spark, num_vertices=16, seed=5)
+
+    def stream(types, lo, hi):
+        pdf = _stream_pdf(np.asarray(types), np.asarray(lo), np.asarray(hi))
+        return stream_df(spark, pdf).coalesce(1)  # one map task
+
+    spark.conf.set(conf, "2")
+    try:
+        plain = alg.build_state(stream(np.zeros(6), src, dst))
+        # (10, 11) goes in first and out last, three batches apart
+        toggle = stream([0] * 7 + [1], [10, *src, 10], [11, *dst, 11])
+        assert alg._gutters(toggle).count() == 4 * alg.num_partitions
+        toggled = alg.build_state(toggle)
+        assert _state_checksum(toggled) == _state_checksum(plain)
+        assert toggled.where("vertex in (10, 11)").count() == 0
+        with pytest.raises(Exception, match="malformed stream"):
+            alg.build_state(stream(np.zeros(8), [10, *src, 11], [11, *dst, 10])).count()
+    finally:
+        spark.conf.set(conf, prev)
+
+
+def test_gutter_routing_matches_spark(spark):
+    """The numpy and Catalyst forms of _vertex_partition agree on ids up to
+    MAX_VERTICES, and Spark's hashpartitioning sends each int route key to
+    its own partition, so each sketch-stage task holds one vertex
+    partition; state rows and gutters both carry int route keys."""
+    from pyspark.sql import functions as F
+
+    from graphzeppelin_spark.operators.sketch_cc import _route_keys, _vertex_partition
+
+    v = np.concatenate([np.arange(1000), MAX_VERTICES - 1 - np.arange(1000)])
+    df = spark.createDataFrame(pd.DataFrame({"v": v}))
+    got = df.select(_vertex_partition(F.col("v"), 8).alias("p")).toPandas()["p"]
+    np.testing.assert_array_equal(got.to_numpy(), _vertex_partition(v, 8))
+    for parts in (3, 8):
+        routes = _route_keys(parts)
+        placed = (
+            spark.createDataFrame(pd.DataFrame({"route": routes}))
+            .repartition(parts, "route")
+            .select("route", F.spark_partition_id().alias("p"))
+            .toPandas()
+        )
+        assert dict(zip(placed["route"], placed["p"])) == {r: p for p, r in enumerate(routes)}
+    alg = SketchCC(spark, num_vertices=16, seed=5)
+    stream = stream_df(spark, _stream_pdf(np.zeros(1), np.array([3]), np.array([4])))
+    rows = alg._state_rows(alg.build_state(stream)).unionAll(alg._gutters(stream))
+    assert dict(rows.dtypes)["route"] == "int"
 
 
 def _er_block(rng, lo: int, size: int, p: float) -> np.ndarray:
