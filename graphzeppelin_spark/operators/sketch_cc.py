@@ -269,7 +269,7 @@ class SketchCC:
         """(vertex, seid) net updates as a table, hash-partitioned by vertex,
         the sign folded into the edge id (eid >= 1 always). The build does
         not run this plan (it nets its gutters in numpy, _sketch_stage);
-        layer probes and scripts read net rows through it.
+        perfbench's layer probes read net rows through it.
 
         hashpartitioning(vertex) satisfies the (vertex, eid) clustered
         distribution, so the groupBy that nets repeat updates runs
@@ -307,8 +307,13 @@ class SketchCC:
         A key is eid*2 + is_hi (eid = lo*n + hi; is_hi names the endpoint,
         so the sketch stage recovers the vertex from the key); it fits a
         uint64 for every n <= MAX_VERTICES. The sign is the AGM one: +u at
-        lo and -u at hi, u = +1 for an insert and -1 for a delete."""
-        n = np.uint64(self.num_vertices)
+        lo and -u at hi, u = +1 for an insert and -1 for a delete.
+
+        An endpoint outside [0, num_vertices) raises, naming the id: its
+        key would decode as another edge. Every build and fold of updates
+        passes here, so this one check covers them all."""
+        nv = self.num_vertices
+        n = np.uint64(nv)
         parts = self.num_partitions
         route = pa.array(_route_keys(parts))
 
@@ -318,6 +323,11 @@ class SketchCC:
                 lo, hi = np.minimum(src, dst), np.maximum(src, dst)
                 keep = lo != hi
                 lo, hi = lo[keep], hi[keep]
+                if len(lo):
+                    low, high = lo.min(), hi.max()
+                    if low < 0 or high >= nv:
+                        bad = low if low < 0 else high
+                        raise ValueError(f"vertex id {bad} outside [0, {nv})")
                 u = np.where(typ[keep] == 0, 1, -1).astype(np.int8)
                 key = (lo.astype(np.uint64) * n + hi.astype(np.uint64)) << np.uint64(1)
                 pid = _vertex_partition(np.concatenate([lo, hi]), parts)
@@ -715,9 +725,8 @@ class SketchCC:
             with np.errstate(over="ignore"):
                 np.add.at(acc, np.searchsorted(roots, [r["root"] for r in rows]), arr)
                 acc[giant] = np.negative(acc.sum(axis=0))  # acc[giant] is still 0
-            slice_geom = _SliceGeom(g, slice_nb, kb)
             for gi in range(kb):
-                status, eid = SketchMatrix(slice_geom, len(roots), acc).sample_many(gi)
+                status, eid = SketchMatrix(g, len(roots), acc).sample_many(gi)
                 rec["fail_samples"] += int((status == FAIL).sum())
                 active, go = _boruvka_step(dsu, forest, self.num_vertices, roots, status, eid)
                 if not go:
@@ -1116,26 +1125,6 @@ class SketchCC:
         )
 
 
-class _SliceGeom:
-    """Geometry view for a pruned k-sample-group slice: the slice looks like
-    a sketch with num_samples=k whose columns are those groups' columns
-    (contiguous in the bucket layout), det bucket in the last slot."""
-
-    def __init__(self, full: SketchGeometry, slice_nbuckets: int, k: int = 1):
-        self.num_vertices = full.num_vertices
-        self.seed = full.seed
-        self.variant = full.variant
-        self.bkt_per_col = full.bkt_per_col
-        self.cols_per_sample = full.cols_per_sample
-        self.num_samples = k
-        self.num_columns = k * full.cols_per_sample
-        self.num_buckets = slice_nbuckets
-        self.checksum_seed = full.checksum_seed
-
-    def column_seed(self, col):
-        raise NotImplementedError("pruned slices are query-only")
-
-
 def _concat(batches):
     """Coalesce an iterator of small Arrow batches into one pandas frame."""
     pdfs = list(batches)
@@ -1291,7 +1280,7 @@ def _sample_frame(
     k sample groups starting at group_lo — l0-sampled once per group; eid
     is 0 unless the sample is GOOD."""
     k = (acc.shape[1] - 1) // (geom.cols_per_sample * geom.bkt_per_col)
-    sm = SketchMatrix(_SliceGeom(geom, acc.shape[1], k), len(roots), acc)
+    sm = SketchMatrix(geom, len(roots), acc)
     frames = []
     for gi in range(k):
         status, eid = sm.sample_many(gi)

@@ -244,8 +244,8 @@ class SketchMatrix:
         chunk=512 keeps every scratch array (chunk x num_columns u64) inside
         the core-private L2 cache, so the ~12-pass hash pipeline never round-
         trips DRAM. This is what makes 32 concurrent python workers scale on
-        one box: measured with scripts/kernel_scaling_probe.py, chunk<=1024
-        gives 0.81-0.83 aggregate efficiency 8->32 procs vs 0.10-0.42 at the
+        one box: measured at local[32] on the round-8 32-core VM, chunk<=1024
+        gave 0.81-0.83 aggregate efficiency 8->32 procs vs 0.10-0.42 at the
         old 32768 (where each worker dragged ~100MB of scratch through DRAM).
         """
         g = self.geom
@@ -478,11 +478,11 @@ def decode_group_rows(
 ) -> np.ndarray:
     """Decode k-group rows back to a dense (n, out_nbuckets, 2) matrix with
     group j's buckets at [j*gsz, (j+1)*gsz) and det in the last slot —
-    the layout _SliceGeom samples; out_nbuckets = k*gsz + 1. grp_lists
-    holds per-row sequences of k blobs (a JVM-side slice of the state's
-    grp array). reuse_slot: decode into a process-cached buffer
-    (cached_zero_buckets contract — the returned matrix is invalidated by
-    the next same-slot call)."""
+    the layout SketchMatrix.sample_many samples (group j at offset j*gsz);
+    out_nbuckets = k*gsz + 1. grp_lists holds per-row sequences of k blobs
+    (a JVM-side slice of the state's grp array). reuse_slot: decode into a
+    process-cached buffer (cached_zero_buckets contract — the returned
+    matrix is invalidated by the next same-slot call)."""
     n = len(grp_lists)
     if reuse_slot is not None:
         out = cached_zero_buckets(out_nbuckets, n, reuse_slot)

@@ -275,110 +275,3 @@ def pages_table(
             }
         )
     return pd.DataFrame(rows)
-
-
-def kron_stream_distributed(
-    spark,
-    scale: int,
-    edge_factor: int,
-    delete_portion: float = 0.5,
-    seed: int = 42,
-    a: float = 0.57,
-    b: float = 0.19,
-    c: float = 0.19,
-    num_partitions: int = 64,
-    chunk: int = 32768,
-):
-    """Distributed RMAT/Kronecker insert+delete stream as a DataFrame —
-    the scale path for big benchmark inputs (kron_19+).
-
-    The driver-side kron_stream generates in one numpy process; on this
-    VM's DRAM-bound cores that is ~3 µs/attempt and Θ(m) driver memory —
-    a 134M-attempt kron_19 takes tens of minutes. Here each of
-    `num_partitions` tasks generates its slice with an independent
-    rng (seeded [seed, pid] — deterministic for fixed partitioning),
-    processing L2-resident `chunk`-sized blocks (the same cache discipline
-    as the sketch kernel), so generation parallelizes across every core
-    and the driver never holds the stream.
-
-    Stream semantics match kron_stream's model: one insert per distinct
-    undirected edge (first attempt wins), then `delete_portion` of edges
-    deleted (deterministic hash selection) with every delete's seq after
-    every insert's — a well-formed alternating stream. The exact edge set
-    differs from kron_stream (different rng consumption order); both are
-    the same RMAT distribution.
-
-    Returns the stream DataFrame (seq, type, src, dst)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    n = 1 << scale
-    m = edge_factor * n
-    per = -(-m // num_partitions)
-
-    def _gen(pdfs):
-        for pdf in pdfs:
-            for pid in pdf["id"].tolist():
-                rng = np.random.default_rng([seed, int(pid)])
-                count = min(per, m - pid * per)
-                if count <= 0:
-                    continue
-                lo_parts, hi_parts = [], []
-                r = np.empty(chunk, dtype=np.float64)
-                bit_buf = np.empty(chunk, dtype=np.int64)
-                mask = np.empty(chunk, dtype=bool)
-                tmp = np.empty(chunk, dtype=bool)
-                src = np.empty(chunk, dtype=np.int64)
-                dst = np.empty(chunk, dtype=np.int64)
-                for off in range(0, count, chunk):
-                    k = min(chunk, count - off)
-                    rs, ds = src[:k], dst[:k]
-                    rs.fill(0)
-                    ds.fill(0)
-                    for bit in range(scale):
-                        rng.random(out=r[:k])
-                        np.greater_equal(r[:k], a + b, out=mask[:k])
-                        np.copyto(bit_buf[:k], mask[:k])
-                        np.left_shift(bit_buf[:k], bit, out=bit_buf[:k])
-                        np.bitwise_or(rs, bit_buf[:k], out=rs)
-                        np.greater_equal(r[:k], a, out=mask[:k])
-                        np.less(r[:k], a + b, out=tmp[:k])
-                        np.logical_and(mask[:k], tmp[:k], out=mask[:k])
-                        np.greater_equal(r[:k], a + b + c, out=tmp[:k])
-                        np.logical_or(mask[:k], tmp[:k], out=mask[:k])
-                        np.copyto(bit_buf[:k], mask[:k])
-                        np.left_shift(bit_buf[:k], bit, out=bit_buf[:k])
-                        np.bitwise_or(ds, bit_buf[:k], out=ds)
-                    keep = rs != ds
-                    lo_parts.append(np.minimum(rs, ds)[keep].copy())
-                    hi_parts.append(np.maximum(rs, ds)[keep].copy())
-                lo = np.concatenate(lo_parts) if lo_parts else np.empty(0, np.int64)
-                hi = np.concatenate(hi_parts) if hi_parts else np.empty(0, np.int64)
-                aid = pid * per + np.arange(len(lo), dtype=np.int64)
-                yield pd.DataFrame({"aid": aid, "lo": lo, "hi": hi})
-
-    attempts = (
-        spark.range(num_partitions)
-        .repartition(num_partitions, "id")
-        .mapInPandas(_gen, schema="aid long, lo long, hi long")
-    )
-    # first attempt per distinct edge wins (any stable representative works:
-    # min attempt id), all JVM-side
-    edges = attempts.groupBy("lo", "hi").agg(F.min("aid").alias("aid"))
-    inserts = edges.select(
-        F.col("aid").alias("seq"),
-        F.lit(0).alias("type"),
-        F.col("lo").alias("src"),
-        F.col("hi").alias("dst"),
-    )
-    thresh = int(delete_portion * 10_000)
-    deletes = edges.where(
-        F.pmod(F.xxhash64("lo", "hi", F.lit(seed)), F.lit(10_000)) < thresh
-    ).select(
-        (F.col("aid") + F.lit(m)).alias("seq"),  # all deletes after all inserts
-        F.lit(1).alias("type"),
-        F.col("lo").alias("src"),
-        F.col("hi").alias("dst"),
-    )
-    stream = inserts.unionAll(deletes)
-    return stream

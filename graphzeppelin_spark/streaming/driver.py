@@ -278,14 +278,7 @@ class GraphStreamDriver:
         was first applied.)"""
         pre = self.stream.where(F.col("seq") < F.lit(self.applied_seq))
         net = (
-            pre.where(F.col("src") != F.col("dst"))
-            .select(
-                F.least("src", "dst").alias("lo"),
-                F.greatest("src", "dst").alias("hi"),
-                F.when(F.col("type") == 0, F.lit(1)).otherwise(F.lit(-1)).alias(
-                    "sign"
-                ),
-            )
+            self.alg._canonical_updates(pre)
             .groupBy("lo", "hi")
             .agg(F.sum("sign").alias("net"))
         )

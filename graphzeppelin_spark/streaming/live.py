@@ -18,7 +18,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
-from graphzeppelin_spark.operators.sketch_cc import SketchCC
+from graphzeppelin_spark.operators.sketch_cc import STATE_SCHEMA, SketchCC
 from graphzeppelin_spark.session import free_local_checkpoint
 from graphzeppelin_spark.sources.stream import STREAM_SCHEMA
 from graphzeppelin_spark.streaming.checkpoint import CheckpointStore
@@ -245,7 +245,7 @@ class LivePagesStream:
         "dict_df": "url string, vid long",
         "pending": "src_url string, dst_url string",
         "inserted": "src long, dst long",
-        "state": "vertex long, sketch binary",
+        "state": STATE_SCHEMA,
     }
 
     def _latest_snapshot(self) -> str | None:

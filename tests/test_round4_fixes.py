@@ -322,7 +322,11 @@ def test_live_pages_resume_from_state_snapshot(spark, tmp_path):
     """With state_checkpoint_dir set, a NEW LivePagesStream instance resumes
     the committed stream offsets AND the full crawl state (dictionary,
     pending forward-links, inserted edges, sketch) — no page lost, no edge
-    double-folded."""
+    double-folded. A snapshot committed before any link resolves holds an
+    empty state table of the state's own schema."""
+    import os
+
+    from graphzeppelin_spark.operators.sketch_cc import STATE_SCHEMA
     from graphzeppelin_spark.oracle import UnionFind
     from graphzeppelin_spark.sources.generators import pages_table, url_for_vertex
     from graphzeppelin_spark.streaming.live import LivePagesStream
@@ -338,7 +342,16 @@ def test_live_pages_resume_from_state_snapshot(spark, tmp_path):
         state_checkpoint_dir=str(tmp_path / "state"),
     )
     live = LivePagesStream(spark, src_dir, **kw)
-    spark.createDataFrame(pages.iloc[:16]).coalesce(1).write.mode("append").parquet(src_dir)
+    # first wave: page 0 alone, whose one href (page 1) is not crawled yet
+    spark.createDataFrame(pages.iloc[:1]).coalesce(1).write.mode("append").parquet(src_dir)
+    live.process_available()
+    assert live.state is None and live.pending.count() == 1
+    empty = spark.read.parquet(os.path.join(live._latest_snapshot(), "state"))
+    assert empty.count() == 0
+    assert [(f.name, f.dataType.simpleString()) for f in empty.schema] == [
+        (f.name, f.dataType.simpleString()) for f in STATE_SCHEMA
+    ]
+    spark.createDataFrame(pages.iloc[1:16]).coalesce(1).write.mode("append").parquet(src_dir)
     live.process_available()
     vid_before = {r["url"]: r["vid"] for r in live.dict_df.collect()}
 

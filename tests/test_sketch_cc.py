@@ -334,6 +334,23 @@ def test_fold_raises_on_double_insert(spark, far):
         alg.build_state(stream_df(spark, bad), base=base).count()
 
 
+@pytest.mark.parametrize("src,dst,bad", [(1, 20, "20"), (-1, 3, "-1")])
+def test_out_of_range_vertex_raises(spark, src, dst, bad):
+    """An endpoint outside [0, n) is rejected by a build and by a fold,
+    naming the id, rather than keyed as another edge: at n = 16 the edge
+    (1, 20) has eid 36, which decodes as (2, 4)."""
+    alg = SketchCC(spark, num_vertices=16, seed=5)
+    base = alg.build_state(
+        stream_df(spark, _stream_pdf(np.zeros(1), np.array([3]), np.array([4])))
+    ).localCheckpoint(eager=True)
+    batch = stream_df(spark, _stream_pdf(np.zeros(2), np.array([5, src]), np.array([6, dst])))
+    match = rf"vertex id {bad} outside \[0, 16\)"
+    with pytest.raises(Exception, match=match):
+        alg.build_state(batch).count()
+    with pytest.raises(Exception, match=match):
+        alg.build_state(batch, base=base).count()
+
+
 def test_guard_nets_across_arrow_batches(spark):
     """Updates of one edge in different Arrow batches of one map task land
     in different gutters; the sketch stage nets them all the same: an
