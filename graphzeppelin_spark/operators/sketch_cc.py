@@ -5,6 +5,7 @@ The Spark rendering of the reference's CC pipeline (SURVEY.md §3.1):
   reference (C++, one box)                     this engine (Spark)
   ------------------------------------------   --------------------------------
   guttering system shuffle by vertex           numpy gutters: a mapInArrow stage
+                                               reads one packed seid column and
                                                ships one row of update keys per
                                                (Arrow batch, partition); one
                                                exchange; keys netted in numpy
@@ -26,7 +27,7 @@ The query is one Boruvka step, repeated (reference boruvka_emulation and
 perform_boruvka_round, src/cc_sketch_alg.cpp:246-380 and 464-513): sum the
 member sketches of every active component over a fresh sample group
 (_sampled_components, the one per-root reduce — round 0 skips it because
-every vertex is its own component), l0-sample each sum (_sample_frame), and
+every vertex is its own component), l0-sample each sum (_sample_batch), and
 union the GOOD samples' edges in a DSU (_boruvka_step). boruvka() runs the first rounds in
 Spark and finishes on the driver once the member rows of every active
 component but the largest fit DRIVER_BYTES; connected_components_distributed
@@ -53,6 +54,9 @@ All three loops stop by one rule (_boruvka_done):
 State is a DataFrame (vertex: long, det: binary, grp: array<binary>) — the
 Spark image of the reference's Bucket* arrays, laid out one sparse blob per
 sample group (see STATE_SCHEMA) — checkpointable to parquet at any point.
+Every python stage here is a mapInArrow stage over the Arrow state codec
+(kernel.encode_group_rows / decode_group_rows): no pandas frame and no
+Python object per row or blob on either side of the boundary.
 The sketch is a linear aggregate, so a later micro-batch folds straight
 into it: build_state(batch, base=state) decodes each state row into its
 vertex's dense slot, adds the batch's updates and encodes once
@@ -91,6 +95,8 @@ from graphzeppelin_spark.sketch.kernel import (
     SketchGeometry,
     SketchMatrix,
     add_group_rows,
+    binary_array,
+    blob_values,
     cached_zero_buckets,
     decode_edges,
     decode_group_rows,
@@ -105,23 +111,18 @@ from graphzeppelin_spark.sketch.kernel import (
 # cross the JVM->Python Arrow boundary. The old single-blob layout shipped
 # every row's FULL sketch and pruned in Python: the transfer dominated
 # (440MB/round at kron_17 for a 1-group round that needed 37MB).
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("vertex", T.LongType(), False),
+def _blob_schema(key: str) -> T.StructType:
+    return T.StructType([
+        T.StructField(key, T.LongType(), False),
         T.StructField("det", T.BinaryType(), False),
         T.StructField("grp", T.ArrayType(T.BinaryType(), False), False),
-    ]
-)
+    ])
 
+
+STATE_SCHEMA = _blob_schema("vertex")
 # per-(map partition, root) partial sums, same grouped-sparse layout — the
 # groupBy(root) exchange ships sparse slices, never dense blobs
-GROUPED_PARTIAL_SCHEMA = T.StructType(
-    [
-        T.StructField("root", T.LongType(), False),
-        T.StructField("det", T.BinaryType(), False),
-        T.StructField("grp", T.ArrayType(T.BinaryType(), False), False),
-    ]
-)
+GROUPED_PARTIAL_SCHEMA = _blob_schema("root")
 
 # driver-finish batching (see _finish_driver_side): FINISH_BATCH_GROUPS
 # sample groups per collected batch. boruvka()'s gate admits the finish once
@@ -219,9 +220,9 @@ class SketchCC:
     @staticmethod
     def _canonical_updates(stream: DataFrame) -> DataFrame:
         """(lo, hi, sign) canonical undirected updates in Catalyst: the edge
-        canonicalization and insert/delete sign convention of the table API
-        (packed_updates) and the streaming driver's validator. The build's
-        gutter stage (_gutters) applies the same rules in numpy.
+        canonicalization and insert/delete sign convention of both ingest
+        paths (_signed_updates: the table API packed_updates and the build's
+        gutters) and of the streaming driver's validator.
 
         Stream contract (validated, not assumed): updates of one edge must
         alternate insert/delete — exactly what the reference asserts on its
@@ -265,6 +266,28 @@ class SketchCC:
             ).cast("boolean"),
         ).otherwise(F.col("net") != 0)
 
+    def _signed_updates(self, stream: DataFrame) -> DataFrame:
+        """(lo, hi, seid) canonical updates, seid = sign * (lo*n + hi): the
+        one ingest key of packed_updates and the build's _gutters. An
+        endpoint outside [0, num_vertices) raises, naming the id, before the
+        product is formed: its eid would decode as another edge (at n = 16
+        the edge (1, 20) has eid 36, which is (2, 4))."""
+        n = self.num_vertices
+
+        def outside(c):
+            return F.raise_error(
+                F.concat(F.lit("vertex id "), F.col(c).cast("string"),
+                         F.lit(f" outside [0, {n})"))
+            )
+
+        lo, hi = F.col("lo").cast("long"), F.col("hi").cast("long")
+        seid = (
+            F.when(lo < 0, outside("lo"))
+            .when(hi >= n, outside("hi"))
+            .otherwise(F.col("sign") * (lo * F.lit(n).cast("long") + hi))
+        )
+        return self._canonical_updates(stream).select("lo", "hi", seid.alias("seid"))
+
     def packed_updates(self, stream: DataFrame) -> DataFrame:
         """(vertex, seid) net updates as a table, hash-partitioned by vertex,
         the sign folded into the edge id (eid >= 1 always). The build does
@@ -274,12 +297,10 @@ class SketchCC:
         hashpartitioning(vertex) satisfies the (vertex, eid) clustered
         distribution, so the groupBy that nets repeat updates runs
         partition-local after the one exchange."""
-        n = self.num_vertices
-        canon = self._canonical_updates(stream)
-        seid = F.col("sign") * (F.col("lo") * F.lit(n) + F.col("hi"))
+        seid = F.col("seid")
         # ONE generator scan (inline of a 2-struct array), not a unionAll of
         # two selects, which would scan the stream twice
-        both = canon.select(
+        both = self._signed_updates(stream).select(
             F.inline(
                 F.array(
                     F.struct(F.col("lo").alias("vertex"), seid.alias("seid")),
@@ -296,54 +317,45 @@ class SketchCC:
     def _gutters(self, stream: DataFrame) -> DataFrame:
         """The reference's gutters (GutteringSystem, graph_sketch_driver.h:
         100-108) as a python map stage over a stream slice, in the sketch
-        stage's row layout. Per Arrow batch it canonicalizes the updates
-        (_canonical_updates' rules), keys both endpoint rows of each and
-        groups the keys by their vertex's build partition
-        (_vertex_partition), then emits ONE row per (batch, partition): the
-        partition's route key (_route_keys), the keys as a uint64 blob and
-        the signs as an int8 blob. The exchange moves batches x partitions
-        rows instead of one per endpoint update.
+        stage's row layout. Per Arrow batch of signed updates it keys both
+        endpoint rows of each and groups the keys by their vertex's build
+        partition (_vertex_partition), then emits ONE row per (batch,
+        partition): the partition's route key (_route_keys), the keys as a
+        uint64 blob and the signs as an int8 blob. The exchange moves
+        batches x partitions rows instead of one per endpoint update.
 
-        A key is eid*2 + is_hi (eid = lo*n + hi; is_hi names the endpoint,
-        so the sketch stage recovers the vertex from the key); it fits a
-        uint64 for every n <= MAX_VERTICES. The sign is the AGM one: +u at
-        lo and -u at hi, u = +1 for an insert and -1 for a delete.
-
-        An endpoint outside [0, num_vertices) raises, naming the id: its
-        key would decode as another edge. Every build and fold of updates
-        passes here, so this one check covers them all."""
-        nv = self.num_vertices
-        n = np.uint64(nv)
+        The stage reads one packed long column, not the stream's three:
+        _signed_updates' seid, canonical and range-checked in Catalyst, from
+        which numpy recovers lo = eid // n and hi = eid % n. A key is
+        eid*2 + is_hi (is_hi names the endpoint, so the sketch stage
+        recovers the vertex from the key); it fits a uint64 for every
+        n <= MAX_VERTICES. The sign is the AGM one: +u at lo and -u at hi,
+        u = +1 for an insert and -1 for a delete."""
+        n = np.uint64(self.num_vertices)
         parts = self.num_partitions
         route = pa.array(_route_keys(parts))
 
         def _emit(batches):
             for b in batches:
-                typ, src, dst = (c.to_numpy() for c in b.columns)
-                lo, hi = np.minimum(src, dst), np.maximum(src, dst)
-                keep = lo != hi
-                lo, hi = lo[keep], hi[keep]
-                if len(lo):
-                    low, high = lo.min(), hi.max()
-                    if low < 0 or high >= nv:
-                        bad = low if low < 0 else high
-                        raise ValueError(f"vertex id {bad} outside [0, {nv})")
-                u = np.where(typ[keep] == 0, 1, -1).astype(np.int8)
-                key = (lo.astype(np.uint64) * n + hi.astype(np.uint64)) << np.uint64(1)
-                pid = _vertex_partition(np.concatenate([lo, hi]), parts)
+                seid = b.column(0).to_numpy()
+                eid = np.abs(seid).view(np.uint64)
+                lo, hi = np.divmod(eid, n)
+                u = np.sign(seid).astype(np.int8)
+                key = eid << np.uint64(1)
+                pid = _vertex_partition(np.concatenate([lo, hi]).view(np.int64), parts)
                 order = np.argsort(pid)
                 keys = np.concatenate([key, key | np.uint64(1)])[order]
                 signs = np.concatenate([u, -u])[order]
-                ends = np.zeros(parts + 1, np.int32)
+                ends = np.zeros(parts + 1, np.int64)
                 np.cumsum(np.bincount(pid, minlength=parts), out=ends[1:])
                 yield pa.RecordBatch.from_arrays(
-                    [route, _binary(keys, ends * 8), _binary(signs, ends)],
+                    [route, binary_array(keys, ends * 8), binary_array(signs, ends)],
                     ["route", "keys", "signs"],
                 )
 
-        return stream.select(
-            F.col("type").cast("int"), F.col("src").cast("long"), F.col("dst").cast("long")
-        ).mapInArrow(_emit, "route int, keys binary, signs binary").select(
+        return self._signed_updates(stream).select("seid").mapInArrow(
+            _emit, "route int, keys binary, signs binary"
+        ).select(
             "route",
             F.lit(-1).cast("long").alias("vertex"),
             # EMPTY blobs, not nulls: Spark's Arrow writer took ~15x longer
@@ -417,28 +429,27 @@ class SketchCC:
         n_groups = geom.num_samples
 
         def _apply(batches):
-            for pdf in _concat(batches):
-                verts = pdf["vertex"].to_numpy(np.int64)
-                old = verts >= 0
-                eids, signs, upd = _net_gutters(pdf["keys"], pdf["signs"], n)
-                uniq, inv = np.unique(np.concatenate([verts[old], upd]), return_inverse=True)
-                if not len(uniq):
-                    continue
-                sm = SketchMatrix(geom, len(uniq), reuse_slot="build")
-                k = int(old.sum())
-                if k:
-                    add_group_rows(
-                        sm.buckets, inv[:k], pdf["det"][old].tolist(),
-                        pdf["grp"][old].tolist(), gsz,
-                    )
-                sm.update_many(inv[k:], eids, signs=signs)
-                dets, grps = encode_group_rows(sm.buckets, gsz, n_groups)
-                yield pd.DataFrame({"vertex": uniq, "det": dets, "grp": grps})
+            b = _one_batch(batches)
+            if b is None:
+                return
+            verts = b.column("vertex").to_numpy()
+            old = verts >= 0
+            eids, signs, upd = _net_gutters(b.column("keys"), b.column("signs"), n)
+            uniq, inv = np.unique(np.concatenate([verts[old], upd]), return_inverse=True)
+            if not len(uniq):
+                return
+            sm = SketchMatrix(geom, len(uniq), reuse_slot="build")
+            k = int(old.sum())
+            if k:
+                st = b.filter(pa.array(old))
+                add_group_rows(sm.buckets, inv[:k], st.column("det"), st.column("grp"), gsz)
+            sm.update_many(inv[k:], eids, signs=signs)
+            yield _state_batch("vertex", uniq, *encode_group_rows(sm.buckets, gsz, n_groups))
 
         return (
             rows.repartition(self.num_partitions, "route")
             .select("vertex", "det", "grp", "keys", "signs")
-            .mapInPandas(_apply, schema=STATE_SCHEMA)
+            .mapInArrow(_apply, STATE_SCHEMA)
         )
 
     # ------------------------------------------------------------------ query
@@ -448,10 +459,11 @@ class SketchCC:
 
         The build shuffle keeps self.num_partitions (the gutter geometry),
         but query stages over the built state are latency-bound by per-task
-        overhead, not bytes. On a 4-core host (local[4]) a mapInPandas
-        stage of trivial tasks costs 0.26 s at 4 tasks and 1.24 s at 64:
-        ~15 ms of stage wall per extra task, PythonRunner's per-task `init`
-        a median 1 ms. Before the package guarded Spark's zip archives
+        overhead, not bytes. On a 4-core host (local[4]) a pandas map stage
+        of trivial tasks (the stages are mapInArrow now, on the same
+        per-task runner) costs 0.26 s at 4 tasks and 1.24 s at 64: ~15 ms
+        of stage wall per extra task, PythonRunner's per-task `init` a
+        median 1 ms. Before the package guarded Spark's zip archives
         against re-reads (session.skip_unchanged_zip_rereads) the same
         stages took 0.64 s and 8.4 s: ~127 ms per task, `init` a median
         277 ms. Scale-adaptive: sc.defaultParallelism is total cores on a
@@ -605,7 +617,7 @@ class SketchCC:
         group in [group_lo, group_hi), from the one per-root reduce: sum the
         member sketches of every component in labels_df over those groups
         plus the deterministic bucket (last slot), then sample each final
-        partition's dense sums (_sample_frame). Sampling k fresh groups
+        partition's dense sums (_sample_batch). Sampling k fresh groups
         against one component partition is statistically equivalent to k
         classic rounds' worth of samples and costs ONE distributed reduce
         instead of k.
@@ -627,31 +639,31 @@ class SketchCC:
             labels_df, "vertex"
         ).select("root", "det", "grp")
 
-        def _sum(pdf, stage):
+        def _sum(b, stage):
             arr = decode_group_rows(
-                pdf["det"].tolist(), pdf["grp"].tolist(), k, gsz, slice_nb,
-                reuse_slot="gdec_" + stage,
+                b.column("det"), b.column("grp"), k, gsz, slice_nb, reuse_slot="gdec_" + stage
             )
-            uniq, inv = np.unique(pdf["root"].to_numpy(np.int64), return_inverse=True)
+            uniq, inv = np.unique(b.column("root").to_numpy(), return_inverse=True)
             acc = cached_zero_buckets(slice_nb, len(uniq), "gacc_" + stage)
             with np.errstate(over="ignore"):
                 np.add.at(acc, inv, arr)
             return uniq, acc
 
         def _partial(batches):
-            for pdf in _concat(batches):
-                uniq, acc = _sum(pdf, "partial")
-                dets, grps = encode_group_rows(acc, gsz, k)
-                yield pd.DataFrame({"root": uniq, "det": dets, "grp": grps})
+            # a root's rows may span batches: the final stage sums its partials
+            for b in batches:
+                uniq, acc = _sum(b, "partial")
+                yield _state_batch("root", uniq, *encode_group_rows(acc, gsz, k))
 
         def _final(batches):
-            for pdf in _concat(batches):
-                yield _sample_frame(g, *_sum(pdf, "final"), group_lo)
+            b = _one_batch(batches)
+            if b is not None:
+                yield _sample_batch(g, *_sum(b, "final"), group_lo)
 
         return (
-            joined.mapInPandas(_partial, schema=GROUPED_PARTIAL_SCHEMA)
+            joined.mapInArrow(_partial, GROUPED_PARTIAL_SCHEMA)
             .repartition(self._query_parts(), "root")
-            .mapInPandas(_final, schema=SAMPLE_SCHEMA)
+            .mapInArrow(_final, SAMPLE_SCHEMA)
         )
 
     def _finish_driver_side(
@@ -709,21 +721,20 @@ class SketchCC:
             others = mroots != active[giant]
             rows = self._sliced(state, group_lo, group_lo + kb).join(
                 self._labels_df(verts[others], mroots[others]), "vertex"
-            ).select("root", "det", "grp").collect()
+            ).select("root", "det", "grp").toArrow()
             group_lo += kb
-            dets = [r["det"] for r in rows]
-            grps = [r["grp"] for r in rows]
+            det, grp = (rows.column(c).combine_chunks() for c in ("det", "grp"))
             rec["giant_rows"] += int(sizes[giant])
-            rec["collected_rows"] += len(rows)
+            rec["collected_rows"] += rows.num_rows
             rec["est_bytes"] += int(others.sum()) * self._slice_bytes(kb)
-            rec["collected_bytes"] += sum(map(len, dets)) + sum(
-                len(b) for row in grps for b in row
+            rec["collected_bytes"] += (
+                blob_values(det, np.uint8).size + blob_values(grp.flatten(), np.uint8).size
             )
-            arr = decode_group_rows(dets, grps, kb, gsz, slice_nb)
+            arr = decode_group_rows(det, grp, kb, gsz, slice_nb)
             roots = active
             acc = np.zeros((len(roots), slice_nb, 2), dtype=np.uint64)
             with np.errstate(over="ignore"):
-                np.add.at(acc, np.searchsorted(roots, [r["root"] for r in rows]), arr)
+                np.add.at(acc, np.searchsorted(roots, rows.column("root").to_numpy()), arr)
                 acc[giant] = np.negative(acc.sum(axis=0))  # acc[giant] is still 0
             for gi in range(kb):
                 status, eid = SketchMatrix(g, len(roots), acc).sample_many(gi)
@@ -756,16 +767,14 @@ class SketchCC:
         gsz = geom.cols_per_sample * geom.bkt_per_col
 
         def _sample(batches):
-            for pdf in _concat(batches):
+            for b in batches:
                 arr = decode_group_rows(
-                    pdf["det"].tolist(), pdf["grp"].tolist(), k, gsz, k * gsz + 1,
+                    b.column("det"), b.column("grp"), k, gsz, k * gsz + 1,
                     reuse_slot="gdec_sample",
                 )
-                yield _sample_frame(geom, pdf["vertex"].to_numpy(np.int64), arr, group_lo)
+                yield _sample_batch(geom, b.column("vertex").to_numpy(), arr, group_lo)
 
-        return self._sliced(state, group_lo, group_hi).mapInPandas(
-            _sample, schema=SAMPLE_SCHEMA
-        )
+        return self._sliced(state, group_lo, group_hi).mapInArrow(_sample, SAMPLE_SCHEMA)
 
     def _labels_df(self, verts: np.ndarray, roots: np.ndarray):
         """Broadcastable (vertex, root) map."""
@@ -1125,12 +1134,20 @@ class SketchCC:
         )
 
 
-def _concat(batches):
-    """Coalesce an iterator of small Arrow batches into one pandas frame."""
-    pdfs = list(batches)
-    if not pdfs:
-        return
-    yield pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
+def _one_batch(batches) -> pa.RecordBatch | None:
+    """A task's Arrow batches as one record batch; None if they hold no
+    rows."""
+    batches = [b for b in batches if b.num_rows]
+    if len(batches) > 1:
+        cols = [pa.concat_arrays(c) for c in zip(*(b.columns for b in batches))]
+        return pa.RecordBatch.from_arrays(cols, schema=batches[0].schema)
+    return batches[0] if batches else None
+
+
+def _state_batch(key: str, ids: np.ndarray, det: pa.Array, grp: pa.Array) -> pa.RecordBatch:
+    """(key, det, grp) rows: STATE_SCHEMA's layout keyed by vertex, or
+    GROUPED_PARTIAL_SCHEMA's keyed by root."""
+    return pa.RecordBatch.from_arrays([pa.array(ids, pa.int64()), det, grp], [key, "det", "grp"])
 
 
 def _vertex_partition(v, parts: int):
@@ -1179,22 +1196,14 @@ def _route_keys(parts: int) -> np.ndarray:
     return route
 
 
-def _binary(data: np.ndarray, offsets: np.ndarray) -> pa.Array:
-    """An Arrow binary array over data's bytes without a copy: row i is
-    bytes [offsets[i], offsets[i+1]) (int32 offsets)."""
-    return pa.Array.from_buffers(
-        pa.binary(), len(offsets) - 1, [None, pa.py_buffer(offsets), pa.py_buffer(data)]
-    )
-
-
-def _net_gutters(key_blobs, sign_blobs, n: np.uint64):
+def _net_gutters(keys: pa.Array, signs: pa.Array, n: np.uint64):
     """(eid, signed net, vertex) of the nonzero net updates in one
-    partition's gutters (_gutters): the signs summed per key. Under the
-    stream contract a key's net over a slice is -1, 0 or +1; anything else
-    raises, naming the edge."""
-    keys = np.frombuffer(b"".join(key_blobs), np.uint64)
-    uk, inv = np.unique(keys, return_inverse=True)
-    signs = np.frombuffer(b"".join(sign_blobs), np.int8)
+    partition's gutters (_gutters): the signs summed per key. The keys and
+    signs columns are read in place (state rows carry empty blobs). Under
+    the stream contract a key's net over a slice is -1, 0 or +1; anything
+    else raises, naming the edge."""
+    uk, inv = np.unique(blob_values(keys, np.uint64), return_inverse=True)
+    signs = blob_values(signs, np.int8)
     net = np.bincount(inv, signs, len(uk)).astype(np.int64)
     bad = np.abs(net) > 1
     if bad.any():
@@ -1273,27 +1282,21 @@ def _collect_samples(samples: DataFrame) -> tuple[np.ndarray, np.ndarray, np.nda
     )
 
 
-def _sample_frame(
+def _sample_batch(
     geom: SketchGeometry, roots: np.ndarray, acc: np.ndarray, group_lo: int
-) -> pd.DataFrame:
+) -> pa.RecordBatch:
     """(root, grp, status, eid) rows: every row of `acc` — a dense slice of
-    k sample groups starting at group_lo — l0-sampled once per group; eid
-    is 0 unless the sample is GOOD."""
+    k sample groups starting at group_lo — l0-sampled once per group, group
+    by group; eid is 0 unless the sample is GOOD."""
     k = (acc.shape[1] - 1) // (geom.cols_per_sample * geom.bkt_per_col)
     sm = SketchMatrix(geom, len(roots), acc)
-    frames = []
-    for gi in range(k):
-        status, eid = sm.sample_many(gi)
-        eid[status != GOOD] = 0
-        frames.append(
-            pd.DataFrame(
-                {
-                    "root": roots,
-                    "grp": np.full(len(roots), group_lo + gi, np.int32),
-                    "status": status.astype(np.int32),
-                    "eid": eid.view(np.int64),
-                }
-            )
-        )
-    return pd.concat(frames, ignore_index=True)
+    status, eid = (np.concatenate(a) for a in zip(*map(sm.sample_many, range(k))))
+    eid[status != GOOD] = 0
+    cols = (
+        np.tile(roots, k).astype(np.int64),
+        np.repeat(np.arange(group_lo, group_lo + k, dtype=np.int32), len(roots)),
+        status.astype(np.int32),
+        eid.view(np.int64),
+    )
+    return pa.RecordBatch.from_arrays(list(map(pa.array, cols)), SAMPLE_SCHEMA.names)
 

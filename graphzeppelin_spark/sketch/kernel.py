@@ -36,6 +36,8 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 # splitmix64 constants (public domain; Steele et al.)
 _SM_GAMMA = np.uint64(0x9E3779B97F4A7C15)
@@ -432,95 +434,129 @@ class SketchMatrix:
 # earlier one-blob-per-vertex layout shipped every row's FULL blob and pruned
 # in Python (the transfer, not the decode, dominated: 440MB/round at kron_17).
 # Per-group element format: <idx u16[nnz]><alpha u64[nnz]><gamma u64[nnz]>,
-# idx relative to the group's first bucket; nnz = len(blob) // 18.
+# idx relative to the group's first bucket; nnz = len(blob) // 18. The codec
+# speaks Arrow: encode returns (det BinaryArray, grp ListArray<binary>) that
+# a mapInArrow stage yields as is, and decode reads those columns in place,
+# so no Python object is made per row or per blob.
 
 GROUP_ITEM_BYTES = 18  # u16 idx + u64 alpha + u64 gamma
 
 
+def arrow_offsets(offsets: np.ndarray) -> np.ndarray:
+    """int64 byte offsets as an Arrow binary array's int32 offsets; raises
+    past 2^31 - 1 bytes, which int32 offsets would wrap."""
+    if len(offsets) and int(offsets[-1]) > 2**31 - 1:
+        raise ValueError(f"{int(offsets[-1])} bytes of blobs in one Arrow batch exceed 2^31 - 1")
+    return offsets.astype(np.int32)
+
+
+def binary_array(data, offsets: np.ndarray) -> pa.Array:
+    """An Arrow binary array over data's bytes (a numpy array or an Arrow
+    buffer) without a copy: element i is bytes [offsets[i], offsets[i+1])."""
+    return pa.Array.from_buffers(
+        pa.binary(), len(offsets) - 1,
+        [None, pa.py_buffer(arrow_offsets(offsets)), pa.py_buffer(data)],
+    )
+
+
+def _byte_offsets(arr: pa.Array) -> np.ndarray:
+    """A binary array's len+1 element offsets into its data buffer, as int64
+    (honours the array's own offset, e.g. a slice's)."""
+    return np.frombuffer(arr.buffers()[1], np.int32, len(arr) + 1, arr.offset * 4).astype(np.int64)
+
+
+def blob_values(arr: pa.Array, dtype) -> np.ndarray:
+    """Every element of a binary array, concatenated and viewed as `dtype`
+    in place in the data buffer (no copy)."""
+    lo, hi = _byte_offsets(arr)[[0, -1]]
+    if hi == lo:  # no bytes to view
+        return np.empty(0, dtype)
+    return np.frombuffer(arr.buffers()[2], dtype, (hi - lo) // np.dtype(dtype).itemsize, lo)
+
+
 def encode_group_rows(
     buckets: np.ndarray, gsz: int, num_groups: int
-) -> tuple[list[bytes], list[list[bytes]]]:
+) -> tuple[pa.Array, pa.Array]:
     """Encode a dense (n, num_groups*gsz + 1, 2) bucket matrix (det bucket in
-    the last slot) into (det 16-byte blobs, per-row lists of per-group sparse
-    blobs). Inverse of decode_group_rows."""
-    n = buckets.shape[0]
-    a = buckets[..., 0]
-    g = buckets[..., 1]
-    det_arr = np.ascontiguousarray(buckets[:, -1, :])  # (n, 2) alpha,gamma
-    det_bytes = det_arr.tobytes()
-    rows_nz, cols_nz = np.nonzero((a[:, :-1] | g[:, :-1]) != 0)
-    grp_of = cols_nz // gsz
-    idx_in = (cols_nz - grp_of * gsz).astype(np.uint16)
-    # np.nonzero is row-major and cols ascend within a row, so the nonzeros
-    # are already sorted by (row, group): bincount offsets index them directly
-    key = rows_nz * num_groups + grp_of
-    counts = np.bincount(key, minlength=n * num_groups)
-    offs = np.zeros(n * num_groups + 1, dtype=np.int64)
-    np.cumsum(counts, out=offs[1:])
-    av = a[rows_nz, cols_nz]
-    gv = g[rows_nz, cols_nz]
-    ib, ab, gb = idx_in.tobytes(), av.tobytes(), gv.tobytes()
-    dets = [det_bytes[16 * i : 16 * i + 16] for i in range(n)]
-    grps: list[list[bytes]] = []
-    for i in range(n):
-        base = i * num_groups
-        row = []
-        for gi in range(num_groups):
-            s, e = int(offs[base + gi]), int(offs[base + gi + 1])
-            row.append(ib[2 * s : 2 * e] + ab[8 * s : 8 * e] + gb[8 * s : 8 * e])
-        grps.append(row)
-    return dets, grps
+    the last slot) into (det: BinaryArray of 16-byte blobs, grp:
+    ListArray<binary> of num_groups sparse blobs per row); inverse of
+    decode_group_rows. One flatnonzero scan, one (alpha, gamma) gather,
+    bincount offsets and one binary_join_element_wise of the idx, alpha and
+    gamma blocks, three arrays that share those offsets."""
+    n, nb = buckets.shape[:2]
+    buckets = np.ascontiguousarray(buckets)
+    # (alpha != 0, gamma != 0) read as one uint16 per bucket: contiguous
+    # passes, about twice as fast as a strided alpha | gamma
+    flags = (buckets.reshape(-1) != 0).view(np.uint16).reshape(n, nb)[:, :-1]
+    pos = np.flatnonzero(flags != 0)  # row * (nb - 1) + col; det has its own column
+    row, col = np.divmod(pos, nb - 1)
+    alpha, gamma = np.take(buckets.reshape(-1, 2), pos + row, axis=0).T.copy()
+    offs = np.zeros(n * num_groups + 1, np.int64)
+    np.cumsum(np.bincount(pos // gsz, minlength=n * num_groups), out=offs[1:])
+    arrow_offsets(offs * GROUP_ITEM_BYTES)  # the joined blobs must fit one batch
+    blobs = pc.binary_join_element_wise(
+        binary_array((col % gsz).astype(np.uint16), offs * 2),
+        binary_array(alpha, offs * 8),
+        binary_array(gamma, offs * 8),
+        pa.scalar(b"", pa.binary()),
+    )
+    lists = pa.array(np.arange(0, n * num_groups + 1, num_groups, dtype=np.int32))
+    det = binary_array(buckets[:, -1].copy(), np.arange(n + 1, dtype=np.int64) * 16)
+    return det, pa.ListArray.from_arrays(lists, blobs)
 
 
 def decode_group_rows(
-    det_blobs, grp_lists, k: int, gsz: int, out_nbuckets: int,
+    det: pa.Array, grp: pa.Array, k: int, gsz: int, out_nbuckets: int,
     reuse_slot: str | None = None,
 ) -> np.ndarray:
     """Decode k-group rows back to a dense (n, out_nbuckets, 2) matrix with
     group j's buckets at [j*gsz, (j+1)*gsz) and det in the last slot —
     the layout SketchMatrix.sample_many samples (group j at offset j*gsz);
-    out_nbuckets = k*gsz + 1. grp_lists holds per-row sequences of k blobs
-    (a JVM-side slice of the state's grp array). reuse_slot: decode into a
-    process-cached buffer (cached_zero_buckets contract — the returned
-    matrix is invalidated by the next same-slot call)."""
-    n = len(grp_lists)
+    out_nbuckets = k*gsz + 1. det and grp are Arrow arrays of
+    encode_group_rows' layout; grp may be a JVM-side slice of the state's
+    groups. reuse_slot: decode into a process-cached buffer
+    (cached_zero_buckets contract — the returned matrix is invalidated by
+    the next same-slot call)."""
+    n = len(grp)
     if reuse_slot is not None:
         out = cached_zero_buckets(out_nbuckets, n, reuse_slot)
     else:
         out = np.zeros((n, out_nbuckets, 2), dtype=np.uint64)
-    add_group_rows(out, np.arange(n), det_blobs, grp_lists, gsz)
+    add_group_rows(out, np.arange(n), det, grp, gsz)
     return out
 
 
-def add_group_rows(out: np.ndarray, rows: np.ndarray, det_blobs, grp_lists, gsz: int) -> None:
+def add_group_rows(
+    out: np.ndarray, rows: np.ndarray, det: pa.Array, grp: pa.Array, gsz: int
+) -> None:
     """out[rows[i]] += encoded row i, decoded at out's width (k =
     (width - 1) // gsz groups, det in the last slot). A slot named twice
     gets the sum of its rows: the additive merge of linear sketches. Flat
     1-D add.at scatters: as fast as a fancy-index assignment of the same
     items."""
-    n = len(grp_lists)
+    n = len(grp)
     nb = out.shape[1]
     k = (nb - 1) // gsz
-    flat = [b for row in grp_lists for b in row]
-    nnz = np.fromiter((len(b) for b in flat), dtype=np.int64, count=n * k)
-    nnz //= GROUP_ITEM_BYTES
-    idx_parts, a_parts, g_parts = [], [], []
-    for b, m in zip(flat, nnz.tolist()):  # cheap memcpy slices only
-        idx_parts.append(b[: 2 * m])
-        a_parts.append(b[2 * m : 10 * m])
-        g_parts.append(b[10 * m :])
-    idx_all = np.frombuffer(b"".join(idx_parts), dtype=np.uint16).astype(np.int64)
+    blobs = grp.flatten()  # honours the list array's offset
+    offs = _byte_offsets(blobs)
+    nnz = np.diff(offs) // GROUP_ITEM_BYTES
+    # offsets that tile every blob into its idx, alpha and gamma blocks: one
+    # take per block gathers that block of every blob into one buffer
+    starts = offs[:-1]
+    tiled = np.append(np.stack([starts, starts + 2 * nnz, starts + 10 * nnz], 1), offs[-1])
+    blocks = binary_array(blobs.buffers()[2], tiled)
+    idx_b, a_b, g_b = (pc.take(blocks, pa.array(np.arange(j, 3 * len(nnz), 3))) for j in range(3))
     seg = np.arange(n * k, dtype=np.int64)
     rows = np.asarray(rows, dtype=np.int64)
-    idx = np.repeat(rows[seg // k] * nb + (seg % k) * gsz, nnz) + idx_all
+    idx = np.repeat(rows[seg // k] * nb + (seg % k) * gsz, nnz) + blob_values(idx_b, np.uint16)
     alpha = out[..., 0].reshape(-1)
     gamma = out[..., 1].reshape(-1)
-    np.add.at(alpha, idx, np.frombuffer(b"".join(a_parts), dtype=np.uint64))
-    np.add.at(gamma, idx, np.frombuffer(b"".join(g_parts), dtype=np.uint64))
-    det = np.frombuffer(b"".join(det_blobs), dtype=np.uint64).reshape(n, 2)
+    np.add.at(alpha, idx, blob_values(a_b, np.uint64))
+    np.add.at(gamma, idx, blob_values(g_b, np.uint64))
+    dets = blob_values(det, np.uint64).reshape(n, 2)
     idx = rows * nb + (nb - 1)
-    np.add.at(alpha, idx, det[:, 0])
-    np.add.at(gamma, idx, det[:, 1])
+    np.add.at(alpha, idx, dets[:, 0])
+    np.add.at(gamma, idx, dets[:, 1])
 
 
 def encode_edges(src: np.ndarray, dst: np.ndarray, num_vertices: int) -> np.ndarray:

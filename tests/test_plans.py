@@ -219,10 +219,11 @@ def test_build_state_has_single_exchange(spark, parquet_stream):
 
 def test_fold_has_one_python_stage(spark, parquet_stream):
     """A later batch folds into the state with one gutter map stage and ONE
-    sketch stage: the batch's gutters are unioned with the state rows,
-    which are routed to their vertex's build partition in Catalyst, and
-    the union is repartitioned once. No delta state is encoded, shuffled or
-    decoded by a second stage, and no net aggregation runs in the JVM."""
+    sketch stage, both Arrow-native (no pandas stage): the batch's gutters
+    are unioned with the state rows, which are routed to their vertex's
+    build partition in Catalyst, and the union is repartitioned once. No
+    delta state is encoded, shuffled or decoded by a second stage, and no
+    net aggregation runs in the JVM."""
     import re
 
     from graphzeppelin_spark.operators.sketch_cc import SketchCC
@@ -230,8 +231,8 @@ def test_fold_has_one_python_stage(spark, parquet_stream):
     alg = SketchCC(spark, num_vertices=256, seed=3)
     state = alg.build_state(parquet_stream).localCheckpoint(eager=True)
     plan = _plan(alg.build_state(parquet_stream, base=state))
-    assert len(re.findall(r"^\(\d+\) MapInArrow", plan, flags=re.M)) == 1, plan
-    assert len(re.findall(r"^\(\d+\) MapInPandas", plan, flags=re.M)) == 1, plan
+    assert len(re.findall(r"^\(\d+\) MapInArrow", plan, flags=re.M)) == 2, plan
+    assert len(re.findall(r"^\(\d+\) MapInPandas", plan, flags=re.M)) == 0, plan
     assert len(re.findall(r"^\(\d+\) Exchange", plan, flags=re.M)) == 1, plan
 
 

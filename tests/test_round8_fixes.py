@@ -20,34 +20,93 @@ from graphzeppelin_spark.sources.generators import (
 from tests.conftest import stream_df
 
 
+def _reference_group_rows(m: np.ndarray, gsz: int, G: int) -> tuple[list, list]:
+    """The documented state layout written row by row: det = the last
+    bucket's (alpha, gamma) as two u64; grp[g] = <idx u16[nnz]><alpha
+    u64[nnz]><gamma u64[nnz]> over group g's nonzero buckets, idx relative
+    to the group's first bucket."""
+    dets, grps = [], []
+    for row in m:
+        dets.append(row[-1].astype("<u8").tobytes())
+        blobs = []
+        for g in range(G):
+            block = row[g * gsz : (g + 1) * gsz]
+            (idx,) = np.nonzero(block.any(axis=1))
+            blobs.append(
+                idx.astype("<u2").tobytes()
+                + block[idx, 0].astype("<u8").tobytes()
+                + block[idx, 1].astype("<u8").tobytes()
+            )
+        grps.append(blobs)
+    return dets, grps
+
+
+def _slice_decoded(m: np.ndarray, gsz: int, lo: int, k: int) -> np.ndarray:
+    """Groups [lo, lo+k) of m at the slice's start, det in the last slot."""
+    out = np.zeros((len(m), k * gsz + 1, 2), dtype=np.uint64)
+    out[:, : k * gsz] = m[:, lo * gsz : (lo + k) * gsz]
+    out[:, -1] = m[:, -1]
+    return out
+
+
 def test_group_codec_roundtrip():
+    import pyarrow.compute as pc
+
     rng = np.random.default_rng(0)
-    for n, G, gsz in [(7, 4, 10), (100, 12, 105), (1, 1, 3), (5, 3, 7)]:
+    cases = [(7, 4, 10, 0.3), (100, 12, 105, 0.3), (1, 1, 3, 0.3), (5, 3, 7, 0.3),
+             (0, 3, 7, 0.3), (6, 4, 9, 0.0), (9, 5, 6, 0.05)]
+    for n, G, gsz, p in cases:
         nb = G * gsz + 1
         m = np.zeros((n, nb, 2), dtype=np.uint64)
-        mask = rng.random((n, nb)) < 0.3
+        mask = rng.random((n, nb)) < p
         m[..., 0][mask] = rng.integers(1, 2**63, size=mask.sum(), dtype=np.uint64)
         m[..., 1][mask] = rng.integers(1, 2**63, size=mask.sum(), dtype=np.uint64)
-        dets, grps = encode_group_rows(m, gsz, G)
-        assert np.array_equal(decode_group_rows(dets, grps, G, gsz, nb), m)
+        if n > 2:
+            m[2, :-1] = 0  # a row whose groups are all empty
+        det, grp = encode_group_rows(m, gsz, G)
+        # the bytes are the documented layout, not only a self-consistent one
+        assert (det.to_pylist(), grp.to_pylist()) == _reference_group_rows(m, gsz, G)
+        assert np.array_equal(decode_group_rows(det, grp, G, gsz, nb), m)
         # partial slice decode (the per-round JVM pruning contract): groups
         # [lo, lo+k) land at the slice's start, det in the last slot
         k = min(2, G)
         lo = 1 if G > 1 else 0
-        sl = [row[lo : lo + k] for row in grps]
-        nb2 = k * gsz + 1
-        got = decode_group_rows(dets, sl, k, gsz, nb2)
-        exp = np.zeros((n, nb2, 2), dtype=np.uint64)
-        exp[:, : k * gsz] = m[:, lo * gsz : (lo + k) * gsz]
-        exp[:, -1] = m[:, -1]
-        assert np.array_equal(got, exp)
+        sl = pc.list_slice(grp, lo, lo + k)
+        assert np.array_equal(
+            decode_group_rows(det, sl, k, gsz, k * gsz + 1), _slice_decoded(m, gsz, lo, k)
+        )
+        # arrays with non-zero offsets: row slices of both columns, and a
+        # round slice of a row slice
+        a = min(1, n)
+        assert np.array_equal(
+            decode_group_rows(det.slice(a), grp.slice(a), G, gsz, nb), m[a:]
+        )
+        assert np.array_equal(
+            decode_group_rows(det.slice(a), pc.list_slice(grp.slice(a), lo, lo + k),
+                              k, gsz, k * gsz + 1),
+            _slice_decoded(m[a:], gsz, lo, k),
+        )
         # full-width add into named slots: a slot named twice gets the sum
         rows = rng.integers(0, max(1, n // 2), size=n)
         acc = np.zeros((n, nb, 2), dtype=np.uint64)
-        add_group_rows(acc, rows, dets, grps, gsz)
+        add_group_rows(acc, rows, det, grp, gsz)
         exp = np.zeros((n, nb, 2), dtype=np.uint64)
         np.add.at(exp, rows, m)
         assert np.array_equal(acc, exp)
+
+
+def test_group_codec_refuses_batches_past_int32_offsets():
+    """Blob bytes of one Arrow batch past 2^31 - 1 raise instead of
+    wrapping the int32 offsets (checked on int64 offsets, no such batch
+    is built)."""
+    from graphzeppelin_spark.sketch.kernel import GROUP_ITEM_BYTES, arrow_offsets
+
+    fits = np.array([0, 5, (2**31 - 1) // GROUP_ITEM_BYTES], np.int64) * GROUP_ITEM_BYTES
+    assert arrow_offsets(fits).dtype == np.int32
+    assert np.array_equal(arrow_offsets(fits), fits)
+    for top in (2**31, 2**32 + 3):
+        with pytest.raises(ValueError, match=r"exceed 2\^31 - 1"):
+            arrow_offsets(np.array([0, 7, top], np.int64))
 
 
 def test_round_sampler_ships_sliced_groups(spark):

@@ -184,10 +184,10 @@ def test_vertex_id_limit_fails_loudly(spark):
 def _state_sum(alg, state) -> np.ndarray:
     """Sum of every row of `state`, decoded at full width (uint64 wraps)."""
     g = alg.geom
-    rows = state.collect()
-    assert rows
+    rows = state.toArrow()
+    assert rows.num_rows
     arr = decode_group_rows(
-        [r["det"] for r in rows], [r["grp"] for r in rows],
+        rows.column("det").combine_chunks(), rows.column("grp").combine_chunks(),
         g.num_samples, g.cols_per_sample * g.bkt_per_col, g.num_buckets,
     )
     return arr.sum(axis=0)
@@ -336,9 +336,9 @@ def test_fold_raises_on_double_insert(spark, far):
 
 @pytest.mark.parametrize("src,dst,bad", [(1, 20, "20"), (-1, 3, "-1")])
 def test_out_of_range_vertex_raises(spark, src, dst, bad):
-    """An endpoint outside [0, n) is rejected by a build and by a fold,
-    naming the id, rather than keyed as another edge: at n = 16 the edge
-    (1, 20) has eid 36, which decodes as (2, 4)."""
+    """An endpoint outside [0, n) is rejected by a build, by a fold and by
+    packed_updates, naming the id, rather than keyed as another edge: at
+    n = 16 the edge (1, 20) has eid 36, which decodes as (2, 4)."""
     alg = SketchCC(spark, num_vertices=16, seed=5)
     base = alg.build_state(
         stream_df(spark, _stream_pdf(np.zeros(1), np.array([3]), np.array([4])))
@@ -349,6 +349,8 @@ def test_out_of_range_vertex_raises(spark, src, dst, bad):
         alg.build_state(batch).count()
     with pytest.raises(Exception, match=match):
         alg.build_state(batch, base=base).count()
+    with pytest.raises(Exception, match=match):
+        alg.packed_updates(batch).collect()
 
 
 def test_guard_nets_across_arrow_batches(spark):

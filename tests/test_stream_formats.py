@@ -55,9 +55,11 @@ def test_import_reference_stream_roundtrip(spark, tmp_path):
     scripts/import_reference_stream.py -> resume -> ingest the tail -> CC
     matches the oracle. Closes the write_binary interchange gap at the
     documented stream level."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/scripts")
+    scripts = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "scripts")
+    sys.path.insert(0, scripts)
     from import_reference_stream import import_stream
 
     from graphzeppelin_spark.sources.generators import dynamic_erdos_stream
