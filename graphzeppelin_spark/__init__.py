@@ -16,7 +16,7 @@ cannot express natively. Nothing is ported from the reference's C++ engine.
 
 __version__ = "0.2.0"
 
-from graphzeppelin_spark.config import DriverConfig, SketchConfig  # noqa: F401
+from graphzeppelin_spark.config import SketchConfig  # noqa: F401
 from graphzeppelin_spark.session import aqe_off, get_spark, skip_unchanged_zip_rereads  # noqa: F401
 
 # every Python worker imports the package when it unpickles one of its UDFs

@@ -14,7 +14,7 @@ per distinct edge, not per update.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -108,13 +108,22 @@ def stage_edges(
     return staged, m_directed, True
 
 
-def fits_broadcast(n_rows: int, row_bytes: int, max_bytes: int) -> bool:
-    """Shared byte-gate for broadcasting a skinny per-vertex table through an
-    iterative join. Gated on estimated bytes, not rows: row-count gates
-    undercount wide relations (pagerank_df's gate rationale). Default budget
-    64MB of data ≈ a few hundred MB as a built hash relation — inside default
-    driver configs."""
-    return n_rows * row_bytes <= max_bytes
+def content_hash(*cols: str) -> list[Column]:
+    """Order-insensitive content hash of a table over `cols`, as two
+    aggregate columns for agg() or observe(): the row count `c` and the
+    summed xxhash64 `h` (decimal(38,0), so the sum cannot overflow). Equal
+    hashes <=> equal row multisets whp — the iterative operators' edge
+    fingerprint for the resume check and their fixpoint test. Read a
+    result row with hash_value."""
+    return [
+        F.count(F.lit(1)).alias("c"),
+        F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("h"),
+    ]
+
+
+def hash_value(row) -> tuple[int, int]:
+    """(count, hash) of a content_hash result row; an empty table sums to 0."""
+    return int(row["c"]), int(row["h"] or 0)
 
 
 def vertices_of(edges: DataFrame) -> DataFrame:

@@ -27,11 +27,14 @@ labelings of the reference correctness suite (test/cc_alg_test.cpp).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pandas as pd
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from graphzeppelin_spark.config import DRIVER_BYTES, DRIVER_ROW_BYTES, fits_driver
-from graphzeppelin_spark.functions.edges import vertices_of
+from graphzeppelin_spark.functions.edges import content_hash, hash_value, vertices_of
+from graphzeppelin_spark.session import free_local_checkpoint
+from graphzeppelin_spark.sketch.dsu import driver_components
 
 
 def _large_star(edges: DataFrame, broadcast_min: bool = False) -> DataFrame:
@@ -80,12 +83,28 @@ def _small_star(edges: DataFrame, broadcast_min: bool = False) -> DataFrame:
     )
 
 
+def driver_remap(edges: DataFrame, key: str = "v", target: str = "c") -> DataFrame:
+    """The one driver remap: collect an edge set (src, dst) whose bytes the
+    caller has gated with fits_driver, run the vectorized numpy DSU over it
+    and broadcast back (key, target) rows — target = the component's min
+    vertex id — only for the vertices that move (target != key). Serves
+    connected_components_df's driver finish and the per-round contraction of
+    SketchCC.connected_components_distributed."""
+    pdf = edges.select("src", "dst").toPandas()
+    ids, comp = driver_components(pdf["src"], pdf["dst"])
+    moved = comp != ids
+    return F.broadcast(
+        edges.sparkSession.createDataFrame(
+            pd.DataFrame({key: ids[moved], target: comp[moved]}),
+            schema=f"{key} long, {target} long",
+        )
+    )
+
+
 def connected_components_df(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     max_iters: int = 50,
-    checkpoint_each_round: bool = True,
-    pairs_per_check: int = 1,
     checkpoint_dir: str | None = None,
     driver_finish_bytes: int = DRIVER_BYTES,
 ) -> DataFrame:
@@ -93,157 +112,113 @@ def connected_components_df(
 
     `edges` must be canonical undirected (src<dst, no loops); `vertices`
     optionally supplies the full vertex universe (isolated vertices included).
+    Each star round is one localCheckpoint, its convergence test riding
+    observe() on it.
 
     checkpoint_dir: commit the contracted edge set after every round
     (snapshot + round/stats metadata + per-partition lineage) and RESUME
-    mid-convergence when the directory holds snapshots for the same input
-    (guarded by the input edge set's count+hash fingerprint) — the same
-    mechanism as pagerank_df / label_propagation_df; a converged snapshot
-    short-circuits straight to the labeling join.
+    mid-convergence when the latest snapshot is an exact-CC run over the
+    same input (guarded by the input edge set's count+hash fingerprint);
+    any other snapshot starts fresh — the same resume check as pagerank_df
+    / label_propagation_df (CheckpointStore.resume_point). A converged
+    snapshot short-circuits straight to the labeling join.
 
     driver_finish_bytes: when the (possibly already contracted) edge set
     provably fits this byte budget (16 bytes/edge), finish with one collect
-    and a vectorized numpy DSU instead of more star-contraction rounds —
-    the same bounded driver-finish economics as SketchCC.boruvka (the
-    reference's whole query is in-memory; we drop down exactly when it
-    provably fits). Correct mid-convergence because each star round
-    preserves the component partition over the surviving vertices and every
-    non-minimum member stays an edge endpoint until convergence (Kiveris et
-    al. §3 invariants; regression-tested against the recursive oracle from
-    forced mid-round finishes). The DSU labels are canonical (min member
-    id) — identical to the star-contraction fixpoint. Disabled when
-    checkpointing (the per-round snapshot/resume contract is the point
-    there); 0 disables it outright."""
+    and a vectorized numpy DSU (driver_remap) instead of more
+    star-contraction rounds — the same bounded driver-finish economics as
+    SketchCC.boruvka (the reference's whole query is in-memory; we drop down
+    exactly when it provably fits). Correct mid-convergence because each
+    star round preserves the component partition over the surviving
+    vertices and every non-minimum member stays an edge endpoint until
+    convergence (Kiveris et al. §3 invariants; regression-tested against the
+    recursive oracle from forced mid-round finishes). The DSU labels are
+    canonical (min member id) — identical to the star-contraction fixpoint.
+    Disabled when checkpointing (the per-round snapshot/resume contract is
+    the point there); 0 disables it outright."""
     verts = vertices if vertices is not None else vertices_of(edges)
     cur = edges.select(F.col("src").cast("long"), F.col("dst").cast("long")).distinct()
-    cur = cur.localCheckpoint(eager=True) if checkpoint_each_round else cur.persist()
-    def _stats(df: DataFrame) -> tuple[int, int]:
-        # one aggregate job: (row count, order-insensitive content hash) —
-        # equal stats <=> equal edge set whp; replaces a count + exceptAll join
-        r = df.agg(
-            F.count("*").alias("c"),
-            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        return int(r["c"]), int(r["h"] or 0)
-
-    cur_stats = _stats(cur)
+    cur = cur.localCheckpoint(eager=True)
+    # one aggregate job: (row count, order-insensitive content hash) — equal
+    # stats <=> equal edge set whp; replaces a count + exceptAll join
+    cur_stats = hash_value(cur.agg(*content_hash("src", "dst")).collect()[0])
     store = None
     start_iter = 0
     edge_fp = None
     resumed_converged = False
     if checkpoint_dir is not None:
-        from graphzeppelin_spark.session import free_local_checkpoint
         from graphzeppelin_spark.streaming.checkpoint import CheckpointStore
 
-        edge_fp = f"{cur_stats[0]}:{cur_stats[1]}"  # INPUT fingerprint
+        edge_fp = "%d:%d" % cur_stats  # INPUT fingerprint
         store = CheckpointStore(edges.sparkSession, checkpoint_dir)
-        if store.latest_id() is not None:
-            snap, meta = store.read()
-            if (
-                meta.get("kind") == "exact_cc"
-                and meta.get("edge_fp") == edge_fp
-                and meta.get("pairs_per_check") == pairs_per_check
-            ):
-                if checkpoint_each_round:
-                    free_local_checkpoint(cur)
-                else:
-                    cur.unpersist()
-                # no repartition-on-resume here (unlike pagerank/labelprop):
-                # the snapshot feeds _large_star, whose first op is a UNION
-                # of cur with its column-swapped reverse — the union destroys
-                # any input co-partitioning before the groupBy(src) exchange,
-                # so restoring a partitioning would add a shuffle and save
-                # none. The fresh path has the same shape (distinct on
-                # (src,dst) ≠ partitioned on src).
-                cur = snap.persist()
-                cur_stats = (int(meta["c"]), int(meta["h"]))
-                start_iter = int(meta["iteration"])
-                resumed_converged = bool(meta.get("converged"))
+        found = store.resume_point("exact_cc", edge_fp=edge_fp)
+        if found is not None:
+            snap, meta = found
+            free_local_checkpoint(cur)
+            # no repartition-on-resume here (unlike pagerank/labelprop):
+            # the snapshot feeds _large_star, whose first op is a UNION
+            # of cur with its column-swapped reverse — the union destroys
+            # any input co-partitioning before the groupBy(src) exchange,
+            # so restoring a partitioning would add a shuffle and save
+            # none. The fresh path has the same shape (distinct on
+            # (src,dst) ≠ partitioned on src).
+            cur = snap.persist()
+            cur_stats = (int(meta["c"]), int(meta["h"]))
+            start_iter = int(meta["iteration"])
+            resumed_converged = bool(meta.get("converged"))
+
     def _label(mapping: DataFrame) -> DataFrame:
         labels = verts.select(F.col("v").cast("long")).join(mapping, "v", "left")
         return labels.select("v", F.coalesce("c", "v").alias("component"))
 
-    def _driver_finish(cur_df: DataFrame) -> DataFrame:
-        """One collect + vectorized numpy DSU over a byte-gated edge set;
-        returns the (v, c) remap (c = component min, rows only where
-        c != v) to feed the same labeling join as the star-forest path."""
-        import pandas as pd
-
-        from graphzeppelin_spark.sketch.dsu import driver_components
-
-        pdf = cur_df.select("src", "dst").toPandas()
-        ids, comp = driver_components(pdf["src"], pdf["dst"])
-        changed = comp != ids
-        return F.broadcast(
-            edges.sparkSession.createDataFrame(
-                pd.DataFrame({"v": ids[changed], "c": comp[changed]}),
-                schema="v long, c long",
-            )
-        )
-
-    finish_enabled = store is None
-    if finish_enabled and fits_driver(cur_stats[0] * DRIVER_ROW_BYTES, driver_finish_bytes):
-        remap = _driver_finish(cur)
-        if checkpoint_each_round:
-            from graphzeppelin_spark.session import free_local_checkpoint
-
+    broadcast_min = None
+    it = max_iters if resumed_converged else start_iter
+    while True:
+        if store is None and fits_driver(cur_stats[0] * DRIVER_ROW_BYTES, driver_finish_bytes):
+            # the (contracted) edge set fits: finish now, or cut the
+            # convergence tail (the remaining rounds are many tiny
+            # all-cluster jobs)
+            remap = driver_remap(cur)
             free_local_checkpoint(cur)
-        else:
-            cur.unpersist()
-        return _label(remap)
-
-    # the per-star min-map is one skinny row per live vertex and shrinks
-    # every round; broadcasting it makes the adj join map-side, halving the
-    # exchanges per half-round. Size-gated BOTH ways (the pagerank lesson):
-    # worth it only when adj is big enough that its shuffle dominates the
-    # per-half-round broadcast construction (≥1M edges), and possible only
-    # while the vertex set safely fits a broadcast (≤4M rows — conservative,
-    # validated well below the ceiling; see pagerank_df's gate rationale)
-    broadcast_min = cur_stats[0] >= 1_000_000 and verts.count() <= 4_000_000
-    from pyspark.sql import Observation
-
-    for it in range(max_iters if resumed_converged else start_iter, max_iters):
-        # pairs_per_check > 1 trades convergence checks for deeper lineage
-        # per materialization; measured SLOWER on this setup (7.5s vs 30s at
-        # sf0.1 with 2 pairs — the un-checkpointed intermediate star pass
-        # costs more than the check it saves), so the default stays 1
+            return _label(remap)
+        if it >= max_iters:
+            break
+        if broadcast_min is None:
+            # the per-star min-map is one skinny row per live vertex and
+            # shrinks every round; broadcasting it makes the adj join
+            # map-side, halving the exchanges per half-round. Size-gated
+            # BOTH ways (the pagerank lesson): worth it only when adj is
+            # big enough that its shuffle dominates the per-half-round
+            # broadcast construction (≥1M edges), and possible only while
+            # the vertex set fits the one driver budget (16 bytes a row,
+            # about 4.2M rows; see pagerank_df's gate rationale)
+            broadcast_min = cur_stats[0] >= 1_000_000 and fits_driver(
+                verts.count() * DRIVER_ROW_BYTES, DRIVER_BYTES
+            )
+        # one large-star + small-star pair per convergence check: 2 pairs
+        # per check measured SLOWER on this setup (7.5s vs 30s at sf0.1 —
+        # the un-checkpointed intermediate star pass costs more than the
+        # check it saves)
         stepped = _small_star(_large_star(cur, broadcast_min), broadcast_min)
-        if it > 0:
-            for _ in range(pairs_per_check - 1):
-                stepped = _small_star(_large_star(stepped, broadcast_min), broadcast_min)
         # the convergence stats ride observe() on the round's own
-        # materialization — one action per round (the separate _stats agg
+        # materialization — one action per round (the separate stats agg
         # was the second)
         it_obs = Observation()
-        stepped = stepped.observe(
-            it_obs,
-            F.count(F.lit(1)).alias("c"),
-            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("h"),
+        stepped = stepped.observe(it_obs, *content_hash("src", "dst")).localCheckpoint(
+            eager=True
         )
-        if checkpoint_each_round:
-            stepped = stepped.localCheckpoint(eager=True)
-        else:
-            stepped = stepped.persist()
-            stepped.count()  # materialize + fire the observation
-        r = it_obs.get
-        new_stats = (int(r["c"]), int(r["h"] or 0))
-        prev = cur
+        new_stats = hash_value(it_obs.get)
+        free_local_checkpoint(cur)  # superseded round checkpoint
         cur = stepped
-        if checkpoint_each_round:
-            from graphzeppelin_spark.session import free_local_checkpoint
-
-            free_local_checkpoint(prev)  # superseded round checkpoint
-        else:
-            prev.unpersist()
+        it += 1
         converged = new_stats == cur_stats
         if store is not None:
             store.commit(
                 cur,
                 {
                     "kind": "exact_cc",
-                    "iteration": it + 1,
+                    "iteration": it,
                     "edge_fp": edge_fp,
-                    "pairs_per_check": pairs_per_check,
                     "c": new_stats[0],
                     "h": new_stats[1],
                     "converged": converged,
@@ -252,17 +227,6 @@ def connected_components_df(
         if converged:
             break
         cur_stats = new_stats
-        if finish_enabled and fits_driver(cur_stats[0] * DRIVER_ROW_BYTES, driver_finish_bytes):
-            # the contracted set shrank under the gate: cut the convergence
-            # tail (the remaining rounds are many tiny all-cluster jobs)
-            remap = _driver_finish(cur)
-            if checkpoint_each_round:
-                from graphzeppelin_spark.session import free_local_checkpoint
-
-                free_local_checkpoint(cur)
-            else:
-                cur.unpersist()
-            return _label(remap)
 
     # converged: `cur` is a star forest (src = component min, dst = member)
     return _label(cur.select(F.col("dst").alias("v"), F.col("src").alias("c")))

@@ -13,14 +13,21 @@ partial-aggregable; mode uses count-per-(v,label) then argmax, two shuffles).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import math
+
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from graphzeppelin_spark.config import DRIVER_BYTES, DRIVER_ROW_BYTES, fits_driver
 from graphzeppelin_spark.functions.edges import (
-    fits_broadcast,
+    content_hash,
+    hash_value,
     stage_edges,
 )
+from graphzeppelin_spark.session import free_local_checkpoint
+from graphzeppelin_spark.sketch.dsu import driver_components
 
 
 def label_propagation_df(
@@ -30,7 +37,6 @@ def label_propagation_df(
     rule: str = "min",
     jump: bool = True,
     checkpoint_dir: str | None = None,
-    broadcast_max_bytes: int = 64 * 1024 * 1024,
     big_threshold: int = 1_000_000,
     driver_finish_bytes: int = DRIVER_BYTES,
 ) -> DataFrame:
@@ -43,9 +49,15 @@ def label_propagation_df(
     checkpoint_dir: commit the label table after every superstep (snapshot +
     iteration/signature metadata + per-partition lineage, streaming/
     checkpoint.py — same mechanism and guard discipline as pagerank_df) and
-    RESUME mid-convergence when the directory already holds snapshots for
-    the same (rule, jump, n, edge-fingerprint) run; a converged snapshot
-    short-circuits without re-iterating."""
+    RESUME mid-convergence when the latest snapshot is a label propagation
+    run with the same (rule, jump, n, edge-fingerprint); any other snapshot
+    starts fresh, and a converged one short-circuits without re-iterating.
+
+    The min rule with jump, no checkpoint_dir, max_iters >= 2*ceil(log2 n)
+    + 4 and edges + vertices within `driver_finish_bytes` (0 disables it)
+    takes the numpy driver finish. big_threshold is the bidirected-edge row
+    count from which the superstep loop partitions the edge table once and
+    broadcasts labels (while they fit DRIVER_BYTES)."""
     spark = edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     # size-gated plan shape, same discipline and same measured rationale as
@@ -83,8 +95,6 @@ def label_propagation_df(
     # round-trips — identical output by the fixpoint argument (same
     # economics and gate discipline as connected_components_df's driver
     # finish). Mode rule, no-jump, and checkpointed runs keep the loop.
-    import math
-
     if (
         rule == "min"
         and jump
@@ -92,11 +102,6 @@ def label_propagation_df(
         and max_iters >= 2 * math.ceil(math.log2(max(n_verts, 2))) + 4
         and fits_driver((m_bi + n_verts) * DRIVER_ROW_BYTES, driver_finish_bytes)
     ):
-        import numpy as np
-        import pandas as pd
-
-        from graphzeppelin_spark.sketch.dsu import driver_components
-
         epdf = edges_bi.select("src", "dst").toPandas()
         ids = labels.select("v").toPandas()["v"].to_numpy(np.int64)
         s = epdf["src"].to_numpy(np.int64)
@@ -110,58 +115,39 @@ def label_propagation_df(
             schema="v long, label long",
         )
 
-    # labels are two longs per row (16B); same byte-gate helper as pagerank
-    broadcast_labels = big_edges and fits_broadcast(n_verts, 16, broadcast_max_bytes)
-
-    def _sig(df: DataFrame) -> int:
-        # order-insensitive content hash in one job (fixpoint detection)
-        return int(
-            df.agg(
-                F.sum(F.xxhash64("v", "label").cast("decimal(38,0)")).alias("h")
-            ).collect()[0]["h"]
-            or 0
-        )
+    # labels are two longs per row (16B): broadcast under the one driver budget
+    broadcast_labels = big_edges and fits_driver(n_verts * DRIVER_ROW_BYTES, DRIVER_BYTES)
 
     store = None
     start_iter = 0
     edge_fp = None
-    cur_sig = None
     if checkpoint_dir is not None:
         from graphzeppelin_spark.streaming.checkpoint import CheckpointStore
 
         # one cheap agg over the CACHED bidirected edges — a checkpoint dir
         # reused across different graphs must not silently resume
-        fp = edges_bi.agg(
-            F.count(F.lit(1)).alias("m"),
-            F.sum(F.xxhash64("src", "dst").cast("decimal(30,0)")).alias("chk"),
-        ).collect()[0]
-        edge_fp = f"{fp['m']}:{fp['chk']}"
+        fp = edges_bi.agg(*content_hash("src", "dst")).collect()[0]
+        edge_fp = "%d:%d" % hash_value(fp)
         store = CheckpointStore(spark, checkpoint_dir)
-        if store.latest_id() is not None:
-            snap, meta = store.read()
-            if (
-                meta.get("kind") == "labelprop"
-                and meta.get("rule") == rule
-                and meta.get("jump") == jump
-                and meta.get("n") == n_verts
-                and meta.get("edge_fp") == edge_fp
-            ):
-                labels.unpersist()
-                # labels is the per-superstep join spine: re-establish the
-                # v-partitioning the in-loop checkpoints would carry (same
-                # resume treatment as pagerank_df — a resumed big-graph run
-                # must not lose the tuned co-partitioned plan shape)
-                if big_edges:
-                    snap = snap.repartition(n_part, "v")
-                labels = snap.persist()
-                start_iter = int(meta["iteration"])
-                cur_sig = int(meta["sig"])
-                if meta.get("converged"):
-                    edges_bi.unpersist()
-                    return labels.select("v", "label")
-    if cur_sig is None:
-        cur_sig = _sig(labels)
-    from pyspark.sql import Observation
+        found = store.resume_point(
+            "labelprop", rule=rule, jump=jump, n=n_verts, edge_fp=edge_fp
+        )
+        if found is not None:
+            snap, meta = found
+            labels.unpersist()
+            # labels is the per-superstep join spine: re-establish the
+            # v-partitioning the in-loop checkpoints would carry (same
+            # resume treatment as pagerank_df — a resumed big-graph run
+            # must not lose the tuned co-partitioned plan shape)
+            if big_edges:
+                snap = snap.repartition(n_part, "v")
+            labels = snap.persist()
+            start_iter = int(meta["iteration"])
+            if meta.get("converged"):
+                edges_bi.unpersist()
+                return labels.select("v", "label")
+    # order-insensitive content hash in one job (fixpoint detection)
+    cur_sig = hash_value(labels.agg(*content_hash("v", "label")).collect()[0])
 
     for _it in range(start_iter, max_iters):
         lbl = F.broadcast(labels) if broadcast_labels else labels
@@ -206,16 +192,13 @@ def label_propagation_df(
             )
         # the fixpoint signature rides observe() on the checkpoint that
         # materializes the superstep anyway — ONE action per superstep
-        # (the separate _sig job was the second action)
+        # (a separate hash job was the second action)
         it_obs = Observation()
         new_labels = stepped.observe(
-            it_obs,
-            F.sum(F.xxhash64("v", "label").cast("decimal(38,0)")).alias("h"),
+            it_obs, *content_hash("v", "label")
         ).localCheckpoint(eager=True)
-        new_sig = int(it_obs.get["h"] or 0)
+        new_sig = hash_value(it_obs.get)
         labels.unpersist()
-        from graphzeppelin_spark.session import free_local_checkpoint
-
         free_local_checkpoint(labels)  # no-op for the initial persisted plan
         labels = new_labels
         converged = new_sig == cur_sig
@@ -229,7 +212,8 @@ def label_propagation_df(
                     "jump": jump,
                     "n": n_verts,
                     "edge_fp": edge_fp,
-                    "sig": new_sig,
+                    "c": new_sig[0],
+                    "h": new_sig[1],
                     "converged": converged,
                 },
             )

@@ -14,15 +14,19 @@ localCheckpoint (Iceberg snapshot per round in production — resumability).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from graphzeppelin_spark.config import DRIVER_BYTES, DRIVER_ROW_BYTES, fits_driver
 from graphzeppelin_spark.functions.edges import (
-    fits_broadcast,
+    content_hash,
+    hash_value,
     stage_edges,
     vertices_of,
 )
+from graphzeppelin_spark.session import free_local_checkpoint
 
 
 def pagerank_df(
@@ -34,7 +38,6 @@ def pagerank_df(
     num_iters: int | None = None,
     directed: bool = False,
     checkpoint_dir: str | None = None,
-    broadcast_max_bytes: int = 64 * 1024 * 1024,
     big_threshold: int = 1_000_000,
     driver_finish_bytes: int = DRIVER_BYTES,
 ) -> DataFrame:
@@ -43,12 +46,20 @@ def pagerank_df(
     num_iters: run exactly that many iterations (lockstep with an unrolled SQL
     oracle); otherwise iterate until max |delta| < tol.
 
+    Two plans, one answer: a lockstep run with no dangling vertex and no
+    checkpoint_dir whose edges + vertices fit `driver_finish_bytes` (16
+    bytes a row; 0 disables it) iterates in numpy off one collect; every
+    other run takes the one Spark loop, one localCheckpoint per iteration.
+    big_threshold: directed-edge rows from which the loop partitions the
+    edge table once and broadcasts ranks (while they fit DRIVER_BYTES).
+
     checkpoint_dir: commit the ranks table after every iteration (snapshot +
     iteration/delta metadata + per-partition lineage, streaming/checkpoint.py)
-    and, if the directory already holds snapshots for the same (n, damping,
-    directed) run, RESUME from the last committed iteration instead of
+    and, if the latest snapshot is a PageRank run with the same (n, damping,
+    directed, edge fingerprint), RESUME from its iteration instead of
     starting over — the north_rule mid-convergence resumability, same
-    mechanism for a crashed job or an intentional two-phase run.
+    mechanism for a crashed job or an intentional two-phase run. Any other
+    snapshot starts fresh; one past the requested iterations raises.
     """
     spark = edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -75,14 +86,8 @@ def pagerank_df(
     obs = None
     deg_src = directed_edges
     if checkpoint_dir is not None:
-        from pyspark.sql import Observation
-
         obs = Observation()
-        deg_src = directed_edges.observe(
-            obs,
-            F.count(F.lit(1)).alias("m"),
-            F.sum(F.xxhash64("src", "dst").cast("decimal(30,0)")).alias("chk"),
-        )
+        deg_src = directed_edges.observe(obs, *content_hash("src", "dst"))
 
     outdeg = (
         deg_src.groupBy(F.col("src").alias("v")).agg(F.count("*").alias("outdeg"))
@@ -121,30 +126,25 @@ def pagerank_df(
 
         # the deg.count() above scanned the observed plan, so the fingerprint
         # is already computed — no extra job
-        fp_row = obs.get
-        edge_fp = f"{fp_row['m']}:{fp_row['chk']}"
+        edge_fp = "%d:%d" % hash_value(obs.get)
         store = CheckpointStore(spark, checkpoint_dir)
-        if store.latest_id() is not None:
-            snap, meta = store.read()
-            if (
-                meta.get("kind") == "pagerank"
-                and meta.get("n") == n
-                and meta.get("damping") == damping
-                and meta.get("directed") == directed
-                and meta.get("edge_fp") == edge_fp
-            ):
-                if int(meta["iteration"]) > iters:
-                    raise ValueError(
-                        f"checkpoint at iteration {meta['iteration']} exceeds the "
-                        f"requested {iters} iterations; use a fresh checkpoint_dir "
-                        "or request more iterations"
-                    )
-                # ranks is the per-iteration join spine: re-establish the
-                # v-partitioning the in-loop checkpoints would carry
-                if big_edges:
-                    snap = snap.repartition(n_part, "v")
-                ranks = snap.persist()
-                start_iter = int(meta["iteration"])
+        found = store.resume_point(
+            "pagerank", n=n, damping=damping, directed=directed, edge_fp=edge_fp
+        )
+        if found is not None:
+            snap, meta = found
+            if int(meta["iteration"]) > iters:
+                raise ValueError(
+                    f"checkpoint at iteration {meta['iteration']} exceeds the "
+                    f"requested {iters} iterations; use a fresh checkpoint_dir "
+                    "or request more iterations"
+                )
+            # ranks is the per-iteration join spine: re-establish the
+            # v-partitioning the in-loop checkpoints would carry
+            if big_edges:
+                snap = snap.repartition(n_part, "v")
+            ranks = snap.persist()
+            start_iter = int(meta["iteration"])
 
     if ranks is None:
         ranks = deg.select("v", F.lit(1.0 / n).alias("score"), "outdeg").persist()
@@ -161,17 +161,16 @@ def pagerank_df(
             else 0.0
         )
     # ranks is one 24-byte row per vertex: while the estimated broadcast
-    # payload fits (byte gate, default 64MB data ≈ 2.6M rows — a few hundred
-    # MB as a built hash relation, inside default driver configs; row-count
-    # gates undercount wide relations, so the gate is on bytes) the whole
-    # iteration collapses to ONE skinny exchange (map-side join with edges +
-    # partial-agg before the groupBy shuffle, contribs broadcast back into
-    # ranks). Beyond that, the co-partitioned plan (edges and ranks
+    # payload fits the one driver budget (DRIVER_BYTES: 64MB of data ≈ 2.8M
+    # rows — a few hundred MB as a built hash relation, inside default
+    # driver configs; row-count gates undercount wide relations, so the gate
+    # is on bytes) the whole iteration collapses to ONE skinny exchange
+    # (map-side join with edges + partial-agg before the groupBy shuffle,
+    # contribs broadcast back into ranks). Beyond that, the co-partitioned plan (edges and ranks
     # pre-hashed on their join keys, exchange only the contribs side) takes
     # over — the web-scale shape, since the edge table never reshuffles
     # either way. Only active for big edge tables (see the size gate above).
-    broadcast_ranks = big_edges and fits_broadcast(n, 24, broadcast_max_bytes)
-    from pyspark.sql import Observation
+    broadcast_ranks = big_edges and fits_driver(n * 24, DRIVER_BYTES)
 
     # Driver finish (round 8): a LOCKSTEP power iteration over a byte-gated
     # small graph runs in numpy off one collect — 12 unrolled iterations cost
@@ -185,16 +184,14 @@ def pagerank_df(
     # results are bit-identical; beyond that the reduction order may differ
     # from the distributed partial-agg tree at the last-ulp level (the
     # operator's stated correctness target is allclose 1e-6). Lockstep mode
-    # only — no dangling-mass feedback, no checkpoint store, no resume.
+    # only — no dangling-mass feedback, no checkpoint store, no resume;
+    # everything else runs the one Spark loop below.
     if (
         num_iters is not None
         and store is None
         and not has_dangling
         and fits_driver((m_directed + n) * DRIVER_ROW_BYTES, driver_finish_bytes)
     ):
-        import numpy as np
-        import pandas as pd
-
         epdf = directed_edges.select("src", "dst").toPandas()
         dpdf = deg.select("v", "outdeg").toPandas()
         dv = dpdf["v"].to_numpy(np.int64)
@@ -226,58 +223,6 @@ def pagerank_df(
             pd.DataFrame({"v": ids, "score": score}),
             schema="v long, score double",
         )
-
-    # Lockstep fusion (round 8): when no per-iteration scalar feedback is
-    # needed — fixed iteration count, no dangling mass to re-measure, no
-    # checkpoint store — iterations chain LAZILY and only every FUSE-th one
-    # materializes (localCheckpoint). The loop body is restructured onto the
-    # persisted deg table as the join spine, so `ranks` is referenced exactly
-    # once per iteration (in the contribs join) and the lazy plan grows
-    # LINEARLY (the old ranks-spine would double the subtree per level). The
-    # score expression is verbatim the unfused one (dangling is the constant
-    # 0 here), so results are bit-identical; with in-degree <= 2 the
-    # per-vertex sums are order-insensitive anyway. Measured at sf0.1
-    # (12 unrolled iterations): 3.22s -> see OPTIMIZATION_r08.md.
-    fuse = num_iters is not None and not has_dangling and store is None
-    if fuse:
-        FUSE = 4  # 2 and 4 measured equal-best at sf0.1; 12 regressed (AQE
-        # replans the deep chained query per stage) — 4 keeps checkpoints rare
-        prev_ckpt = None
-        init_ranks = ranks
-        for _it in range(start_iter, iters):
-            r = F.broadcast(ranks) if broadcast_ranks else ranks
-            contribs = (
-                directed_edges.join(r, directed_edges.src == r.v)
-                .select(
-                    F.col("dst").alias("v2"),
-                    (F.col("score") / F.col("outdeg")).alias("contrib"),
-                )
-                .groupBy("v2")
-                .agg(F.sum("contrib").alias("incoming"))
-            )
-            c = F.broadcast(contribs) if broadcast_ranks else contribs
-            new_ranks = deg.join(c, deg.v == c.v2, "left").select(
-                deg.v,
-                (
-                    F.lit((1 - damping) / n)
-                    + F.lit(damping)
-                    * (F.coalesce("incoming", F.lit(0.0)) + F.lit(dangling / n))
-                ).alias("score"),
-                deg.outdeg,
-            )
-            if (_it + 1 - start_iter) % FUSE == 0 or _it == iters - 1:
-                new_ranks = new_ranks.localCheckpoint(eager=True)
-                if prev_ckpt is not None:
-                    from graphzeppelin_spark.session import free_local_checkpoint
-
-                    free_local_checkpoint(prev_ckpt)
-                prev_ckpt = new_ranks
-            ranks = new_ranks
-        if init_ranks is not ranks:
-            init_ranks.unpersist()
-        directed_edges.unpersist()
-        deg.unpersist()
-        return ranks.select("v", "score")
 
     for _it in range(start_iter, iters):
         r = F.broadcast(ranks) if broadcast_ranks else ranks
@@ -330,8 +275,6 @@ def pagerank_df(
                 dangling = fired["dmass"] or 0.0
         ranks.unpersist()
         if _it > start_iter:  # superseded per-iteration localCheckpoint
-            from graphzeppelin_spark.session import free_local_checkpoint
-
             free_local_checkpoint(ranks)
         ranks = new_ranks
         if store is not None:

@@ -87,7 +87,7 @@ from graphzeppelin_spark.config import (
     SketchConfig,
     fits_driver,
 )
-from graphzeppelin_spark.sketch.dsu import NumpyDSU, driver_components
+from graphzeppelin_spark.sketch.dsu import NumpyDSU
 from graphzeppelin_spark.sketch.kernel import (
     FAIL,
     GOOD,
@@ -797,7 +797,6 @@ class SketchCC:
         state: DataFrame,
         max_rounds: int | None = None,
         groups_per_round: int | None = None,
-        remap_driver_bytes: int = DRIVER_BYTES,
         complete: bool = False,
     ) -> DataFrame:
         """(vertex, component) with labels resident as a DataFrame end-to-end —
@@ -812,10 +811,11 @@ class SketchCC:
         2. decode endpoints in the JVM, lift them to component ids through
            the label table, dedupe — the round's component multigraph;
         3. contract it (_remap): if the sampled edge set fits
-           `remap_driver_bytes` (bounded by actual EDGES collected, never
+           DRIVER_BYTES (bounded by actual EDGES collected, never
            Θ(num_vertices)), a numpy DSU computes the (root → new_root)
-           remap in-process; otherwise the exact star-contraction operator
-           (operators/connectivity.py) contracts it distributed. A
+           remap in-process (connectivity.driver_remap); otherwise the
+           exact star-contraction operator (operators/connectivity.py)
+           contracts it distributed. A
            same-session interleaved A/B at kron_21's 5.4M-edge/87MB round-0
            multigraph (BENCH/remap_gate_ab.json) measured NO benefit from a
            256MB gate over 64MB (64MB: 182/202s; 256MB: 396/180s — the
@@ -969,7 +969,7 @@ class SketchCC:
                 lbl = labels.select("vertex", "root")
                 if n_edges:
                     lbl = lbl.join(
-                        self._remap(comp_edges, n_edges, remap_driver_bytes), "root", "left"
+                        self._remap(comp_edges, n_edges), "root", "left"
                     )
                 else:
                     lbl = lbl.withColumn("new_root", F.col("root"))
@@ -1044,30 +1044,22 @@ class SketchCC:
             out = out.unionByName(untouched)
         return out
 
-    def _remap(
-        self, comp_edges: DataFrame, n_edges: int, remap_driver_bytes: int
-    ) -> DataFrame:
+    @staticmethod
+    def _remap(comp_edges: DataFrame, n_edges: int) -> DataFrame:
         """(root, new_root) for one round's component multigraph, rows only
-        where the root moves: a driver numpy DSU when the edges fit
-        `remap_driver_bytes` (bounded by the edges collected, never
+        where the root moves: the driver remap when the edges fit
+        DRIVER_BYTES (bounded by the edges collected, never
         Θ(num_vertices)), else the exact star-contraction operator."""
-        if not fits_driver(n_edges * DRIVER_ROW_BYTES, remap_driver_bytes):
-            from graphzeppelin_spark.operators.connectivity import (
-                connected_components_df,
-            )
-
-            return connected_components_df(comp_edges).select(
-                F.col("v").alias("root"), F.col("component").alias("new_root")
-            ).where(F.col("root") != F.col("new_root"))
-        pdf = comp_edges.toPandas()
-        ids, comp = driver_components(pdf["src"], pdf["dst"])
-        moved = comp != ids
-        return F.broadcast(
-            self.spark.createDataFrame(
-                pd.DataFrame({"root": ids[moved], "new_root": comp[moved]}),
-                schema="root long, new_root long",
-            )
+        from graphzeppelin_spark.operators.connectivity import (
+            connected_components_df,
+            driver_remap,
         )
+
+        if fits_driver(n_edges * DRIVER_ROW_BYTES, DRIVER_BYTES):
+            return driver_remap(comp_edges, "root", "new_root")
+        return connected_components_df(comp_edges).select(
+            F.col("v").alias("root"), F.col("component").alias("new_root")
+        ).where(F.col("root") != F.col("new_root"))
 
     def spanning_forest(self, state: DataFrame) -> DataFrame:
         _, forest = self.boruvka(state)

@@ -289,6 +289,23 @@ class CheckpointStore:
         self.backend.publish(snap_id, meta)
         return snap_id
 
+    def resume_point(
+        self, kind: str, **params: Any
+    ) -> tuple[DataFrame, dict[str, Any]] | None:
+        """The resume check of the iterative operators: the latest snapshot
+        as (state, meta) when operator `kind` wrote it with the same
+        `params` (the input's edge fingerprint among them), else None. A dir
+        reused for another operator, parameter or graph then starts fresh
+        instead of silently resuming the wrong state; the metadata is read
+        first, so a mismatch reads no state."""
+        sid = self.latest_id()
+        if sid is None:
+            return None
+        meta = self.backend.read_meta(sid)
+        if meta.get("kind") != kind or any(meta.get(k) != v for k, v in params.items()):
+            return None
+        return self.read(sid)
+
     def read(self, snap_id: int | None = None) -> tuple[DataFrame, dict[str, Any]]:
         sid = snap_id if snap_id is not None else self.latest_id()
         if sid is None:

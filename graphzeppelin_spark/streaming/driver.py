@@ -29,7 +29,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from graphzeppelin_spark.config import DriverConfig, SketchConfig
+from graphzeppelin_spark.config import DRIVER_BYTES, DRIVER_ROW_BYTES, SketchConfig, fits_driver
 from graphzeppelin_spark.operators.sketch_cc import SketchCC
 from graphzeppelin_spark.sketch.dsu import NumpyDSU
 from graphzeppelin_spark.streaming.checkpoint import CheckpointStore
@@ -45,18 +45,11 @@ class GraphStreamDriver:
         variant: str = "cameo",
         checkpoint_dir: str | None = None,
         eager: bool = True,
-        eager_batch_limit: int = 500_000,
-        config: "DriverConfig | None" = None,
         sketch_config: "SketchConfig | None" = None,
         validate_stream: bool = False,
     ):
         if sketch_config is None:
             sketch_config = SketchConfig(seed=seed, variant=variant)
-        if config is not None:  # unified config surface (config.DriverConfig)
-            checkpoint_dir = config.checkpoint_dir
-            eager = config.eager
-            eager_batch_limit = config.eager_batch_limit
-            validate_stream = config.validate_stream
         self.spark = spark
         self.stream = stream
         self.num_vertices = num_vertices
@@ -68,7 +61,6 @@ class GraphStreamDriver:
         self.variant = sketch_config.variant
         # eager cache (reference pre_insert / dsu_valid)
         self.eager = eager
-        self.eager_batch_limit = eager_batch_limit
         self._dsu: NumpyDSU | None = NumpyDSU(num_vertices) if eager else None
         # spanning-forest membership, packed as a SORTED int64 array of
         # lo*n+hi codes (lo<hi): ~8B/edge vs ~100B+/edge for a Python set of
@@ -310,13 +302,14 @@ class GraphStreamDriver:
     def _eager_maintain(self, batch: DataFrame, num_rows: int) -> None:
         """Reference pre_insert analog on a whole micro-batch: insert edges
         union-found eagerly; a delete of a current forest edge invalidates the
-        cached labeling. A batch of more than eager_batch_limit non-loop
-        updates (num_rows, counted during the ingest job) invalidates the
-        cache without collecting anything. The collect has no limit: a
-        limit funnels the batch through one CollectLimit partition."""
+        cached labeling. A batch whose non-loop updates (num_rows, counted
+        during the ingest job) would not fit DRIVER_BYTES as collected rows
+        (four longs each, about 2.1M rows) invalidates the cache without
+        collecting anything. The collect has no limit: a limit funnels the
+        batch through one CollectLimit partition."""
         if not self._dsu_valid:
             return
-        if num_rows > self.eager_batch_limit:
+        if not fits_driver(num_rows * 2 * DRIVER_ROW_BYTES, DRIVER_BYTES):
             self._dsu_valid = False
             return
         rows = (
@@ -539,7 +532,6 @@ class GraphStreamDriver:
         stream: DataFrame,
         checkpoint_dir: str,
         eager: bool = True,
-        eager_batch_limit: int = 500_000,
         validate_stream: bool = False,
     ) -> "GraphStreamDriver":
         """Reconstruct a driver from the latest snapshot; continues the stream
@@ -563,7 +555,6 @@ class GraphStreamDriver:
             ),
             checkpoint_dir=checkpoint_dir,
             eager=eager,
-            eager_batch_limit=eager_batch_limit,
             validate_stream=validate_stream,
         )
         drv.state = state.persist()

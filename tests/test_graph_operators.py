@@ -203,3 +203,28 @@ def test_pagerank_checkpoint_guards(spark, tmp_path):
     # the B checkpoint now holds 4 iterations; asking for 2 must refuse
     with _pytest.raises(ValueError, match="exceeds the requested"):
         pagerank_df(edges_b, vertices=verts, num_iters=2, checkpoint_dir=ck)
+
+
+def test_resume_check_starts_fresh_on_another_run(spark, tmp_path):
+    """The one resume check (CheckpointStore.resume_point): a checkpoint dir
+    whose latest snapshot is another operator's, or the same operator's run
+    with another parameter, starts fresh and gives a fresh run's result."""
+    edges = live_edges_df(stream_df(spark, multiples_graph_stream(128)))
+
+    # label propagation on a PageRank dir
+    ck = str(tmp_path / "pr_then_lp")
+    pagerank_df(edges, num_iters=4, checkpoint_dir=ck)
+    got = label_propagation_df(edges, jump=False, checkpoint_dir=ck)
+    fresh = label_propagation_df(edges, jump=False)
+    got, fresh = (df.orderBy("v").toPandas() for df in (got, fresh))
+    np.testing.assert_array_equal(got["v"], fresh["v"])
+    np.testing.assert_array_equal(got["label"], fresh["label"])
+
+    # PageRank with another damping on a PageRank dir
+    ck = str(tmp_path / "pr_damping")
+    pagerank_df(edges, num_iters=4, checkpoint_dir=ck)
+    got = pagerank_df(edges, damping=0.5, num_iters=6, checkpoint_dir=ck)
+    fresh = pagerank_df(edges, damping=0.5, num_iters=6)
+    got, fresh = (df.orderBy("v").toPandas() for df in (got, fresh))
+    np.testing.assert_array_equal(got["v"], fresh["v"])
+    np.testing.assert_allclose(got["score"], fresh["score"], rtol=0, atol=1e-12)

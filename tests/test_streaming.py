@@ -78,10 +78,14 @@ def test_eager_cache_insert_only(spark):
     np.testing.assert_array_equal(drv.connected_components(), expected)
 
 
-def test_eager_batch_over_limit_invalidates_without_collect(spark):
-    """A batch of more non-loop updates than eager_batch_limit invalidates
-    the cache on the row count the ingest job observes: it starts no
-    collect job, so it runs as many jobs as an eager=False driver."""
+def test_eager_batch_over_limit_invalidates_without_collect(spark, monkeypatch):
+    """A batch whose non-loop updates would not fit the driver byte budget
+    invalidates the cache on the row count the ingest job observes: it
+    starts no collect job, so it runs as many jobs as an eager=False
+    driver. The budget is shrunk to 10 collected rows (32 bytes each)."""
+    import graphzeppelin_spark.streaming.driver as driver_mod
+
+    monkeypatch.setattr(driver_mod, "DRIVER_BYTES", 10 * 32)
     n = 256
     s = multiples_graph_stream(n)
     sc = spark.sparkContext
@@ -91,7 +95,7 @@ def test_eager_batch_over_limit_invalidates_without_collect(spark):
             group = f"eager-over-limit-{eager}-{id(s)}"
             sc.setJobGroup(group, "eager over-limit test")
             drv = GraphStreamDriver(
-                spark, stream_df(spark, s), n, seed=5, eager=eager, eager_batch_limit=10
+                spark, stream_df(spark, s), n, seed=5, eager=eager
             )
             drv.process_stream_until(len(s))
             jobs[eager] = len(sc.statusTracker().getJobIdsForGroup(group))
@@ -204,9 +208,9 @@ def test_micro_batched_ingest_matches_oneshot(spark):
 
 
 def test_unified_config_surface(spark):
-    """CCAlgConfiguration/DriverConfiguration analog: the dataclass configs
-    must drive the same knobs as the keyword arguments."""
-    from graphzeppelin_spark.config import DriverConfig, SketchConfig
+    """CCAlgConfiguration analog: the sketch dataclass config must drive the
+    same knobs as the keyword arguments."""
+    from graphzeppelin_spark.config import SketchConfig
     from graphzeppelin_spark.operators.sketch_cc import SketchCC
     from graphzeppelin_spark.streaming.driver import GraphStreamDriver
     from graphzeppelin_spark.sources.generators import multiples_graph_stream
@@ -221,11 +225,9 @@ def test_unified_config_surface(spark):
     s = multiples_graph_stream(64)
     drv = GraphStreamDriver(
         spark, stream_df(spark, s), num_vertices=64,
-        sketch_config=SketchConfig(seed=11),
-        config=DriverConfig(eager=False, eager_batch_limit=10),
+        sketch_config=SketchConfig(seed=11), eager=False,
     )
     assert drv.seed == 11 and drv.eager is False
-    assert drv.eager_batch_limit == 10
 
 
 def test_aqe_off_is_reentrant_across_threads(spark):
